@@ -68,9 +68,17 @@ object Deadline {
   * The reference fans out one goroutine per variable and fails the whole
   * request if ANY variable is missing (no partial responses,
   * `serving-go/README.md:59`). Here the fan-out collapses into ONE
-  * set-oriented plan — all variables answered by a single
-  * [[PointQuery.getSamples]] + broadcast lineage join — and the
+  * aggregate per request — [[PointQuery.atPoint]], keyed by variable, with
+  * the point as literals: no join, no broadcast — and the
   * fail-if-any-missing check happens on the ≤ |variables| collected rows.
+  * Lineage is resolved ONCE per Service: `curated ⋈ raw_files` (both small
+  * dimension catalogs) is collected at construction into an in-memory map
+  * `catalogId → Lineage`, and each answer looks its catalogId up there; a
+  * catalogId without a curated or raw-file row gets `lineage = None`.
+  *
+  * Snapshot contract: a Service answers from the grid files and catalog rows
+  * that existed when it was built (the frames' file listings and the lineage
+  * map are fixed then) — rebuild it after an ingest or a compaction.
   *
   * @param maxStaleness when set, a probe only snaps to grid data at most
   *   this much older than its requested timestamp. Bounds the as-of scan
@@ -86,28 +94,25 @@ final class Service(finalView: DataFrame, curated: DataFrame, rawFiles: DataFram
     maxStaleness: Option[java.time.Duration] = None,
     queryBudget: Option[java.time.Duration] = None) {
 
+  private val lineage: Map[String, Lineage] =
+    curated.select(col("id").as("catalogId"), col("rawFileId"))
+      .join(rawFiles.select(col("id").as("rawFileId"), col("source"), col("dataset")),
+        "rawFileId")
+      .filter(col("catalogId").isNotNull && col("source").isNotNull)
+      .collect()
+      .map(r => r.getAs[String]("catalogId") ->
+        Lineage(r.getAs[String]("source"), r.getAs[String]("dataset"), r.getAs[String]("rawFileId")))
+      .toMap
+
+  /** The one plan that answers `req`. */
+  private[graft] def plan(req: EnvironmentalRequest): DataFrame =
+    PointQuery.atPoint(finalView, req.variables, Timestamp.from(req.timestamp),
+      req.lat.toDouble, req.lon.toDouble, maxStaleness)
+
   def getVariables(req: EnvironmentalRequest): Either[ServeError, Seq[VariableResult]] = {
-    val spark = finalView.sparkSession
-    import spark.implicits._
-    val probes = req.variables
-      .map(v => (v, v, Timestamp.from(req.timestamp), req.lat.toDouble, req.lon.toDouble))
-      .toDF("probeId", "variable", "ts", "lat", "lon")
-    // All probes in one request share req.timestamp, so the horizon is also
-    // applied as a STATIC window on the view: timestamp is a dedup-group key,
-    // so Catalyst pushes these bounds below the FINAL aggregate to the scan.
-    val bounded = maxStaleness match {
-      case Some(h) =>
-        val hi = Timestamp.from(req.timestamp)
-        val lo = Timestamp.from(req.timestamp.minus(h))
-        finalView.filter(col("timestamp").between(lit(lo), lit(hi)))
-      case None => finalView
-    }
-    val frame = PointQuery.withLineage(
-      PointQuery.getSamples(bounded, probes, maxStaleness),
-      curated.select(col("id"), col("rawFileId")),
-      rawFiles.select(col("id"), col("source"), col("dataset")))
+    val frame = plan(req)
     val collected = queryBudget match {
-      case Some(b) => Deadline.run(spark, b)(frame.collect())
+      case Some(b) => Deadline.run(finalView.sparkSession, b)(frame.collect())
       case None =>
         try Right(frame.collect())
         catch { case e: Throwable => Left(ServeError.Failure(e)) }
@@ -116,6 +121,7 @@ final class Service(finalView: DataFrame, curated: DataFrame, rawFiles: DataFram
       val answered = rows.map { r =>
         // the curated store is Float32, but tolerate double-typed frames
         def f(c: String): Float = r.getAs[Number](c).floatValue()
+        val catalogId = r.getAs[String]("catalogId")
         r.getAs[String]("variable") -> VariableResult(
           name = r.getAs[String]("variable"),
           value = f("value"),
@@ -123,9 +129,8 @@ final class Service(finalView: DataFrame, curated: DataFrame, rawFiles: DataFram
           refTimestamp = r.getAs[Timestamp]("refTimestamp"),
           actualLat = f("actualLat"),
           actualLon = f("actualLon"),
-          catalogId = r.getAs[String]("catalogId"),
-          lineage = Option(r.getAs[String]("source")).map(src =>
-            Lineage(src, r.getAs[String]("dataset"), r.getAs[String]("rawFileId"))))
+          catalogId = catalogId,
+          lineage = lineage.get(catalogId))
       }.toMap
       val missing = req.variables.filterNot(answered.contains)
       if (missing.nonEmpty) Left(ServeError.Missing(missing))

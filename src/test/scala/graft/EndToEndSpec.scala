@@ -2,8 +2,6 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.functions._
-
 import graft.jobs.DailyJob
 import graft.serve.PointQuery
 import graft.sources.{GribMessage, GribReader, SyntheticMessage}
@@ -109,26 +107,22 @@ class EndToEndSpec extends SparkSpec {
     assert(math.abs(rh - 73.0f) < 0.5f, s"Magnus oracle ≈73%%, got $rh")
 
     // lineage resolves through curated → raw_files to the deterministic run
-    val probes = spark.createDataFrame(Seq(
-      ("p1", "humidity", Timestamp.valueOf("2026-01-01 15:30:00"), 52.52, 13.40)))
-      .toDF("probeId", "variable", "ts", "lat", "lon")
-    val withLin = PointQuery.withLineage(
-      PointQuery.getSamples(grids.finalView(), probes),
-      curated.read().select(col("id"), col("rawFileId")),
-      rawFiles.read().select(col("id"), col("source"), col("dataset")))
-    val r = withLin.collect()(0)
-    assert(r.getAs[String]("source") === "ecmwf")
-    assert(r.getAs[String]("dataset") === "ifs-weather-forecast")
-    assert(r.getAs[String]("rawFileId") !== null)
+    val svc = new graft.serve.Service(grids.finalView(), curated.read(), rawFiles.read())
+    val r = svc.getVariables(graft.serve.RequestValidation.parse(
+      "52.52", "13.40", "2026-01-01T15:30:00Z", "humidity").toOption.get).toOption.get.head
+    val lineage = r.lineage.get
+    assert(lineage.source === "ecmwf")
+    assert(lineage.dataset === "ifs-weather-forecast")
+    assert(lineage.rawFileId !== null)
     // T=Td oracle: dewpoint==temperature would give 100%; here Td<T so RH<100
-    assert(r.getAs[Float]("value") < 100.0f)
+    assert(r.value < 100.0f)
   }
 
   test("§3.1 full stack: HTTP in, deadline armed, lineage joined — response.go contract") {
     // the a2j3 serving flagship THROUGH HttpFront over the REAL store:
     // DailyJob-ingested GridStore (T2/T3), FINAL dedup view, staleness
-    // horizon + query budget armed (T7), one set-oriented plan answering
-    // every variable with broadcast lineage (T6/J1/J4), and the exact
+    // horizon + query budget armed (T7), one aggregate answering every
+    // variable, lineage from the Service's catalog map (T6/J1/J4), and the exact
     // snake_case JSON contract of the reference's response.go:15-42.
     import com.fasterxml.jackson.databind.ObjectMapper
     import graft.serve.{HttpFront, Service}

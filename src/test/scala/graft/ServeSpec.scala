@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
+import graft.model.Lineage
 import graft.serve.{PointQuery, RequestValidation, Service}
 
 /** Serving read path — mirrors `serving-go/internal/grid/finder_integration_test.go`
@@ -33,8 +34,11 @@ class ServeSpec extends SparkSpec {
   }
 
   test("A2 scalar: no data at or before ts → None") {
-    assert(PointQuery.snapTimestamp(grid, "temperature",
-      Timestamp.valueOf("2020-01-01 00:00:00")).isEmpty)
+    // no data is zero rows in the hit's shape (once emptyDataFrame, no columns)
+    val out = PointQuery.getSample(grid, "temperature",
+      Timestamp.valueOf("2020-01-01 00:00:00"), 52.5f, 13.4f)
+    assert(out.collect().isEmpty)
+    assert(out.columns.toSeq === Seq("value", "unit", "lat", "lon", "timestamp", "catalogId"))
   }
 
   test("set-oriented getSamples matches the scalar path per probe") {
@@ -61,13 +65,16 @@ class ServeSpec extends SparkSpec {
   }
 
   test("J1/J4: lineage joins resolve source/dataset via catalogId") {
-    val samples = PointQuery.getSamples(grid,
-      Seq(("p1", "humidity", t12, 52.5, 13.4)).toDF("probeId", "variable", "ts", "lat", "lon"))
-    val curated = Seq(("cat-h", "raw-1")).toDF("id", "rawFileId")
+    // cat-t has a curated row but no raw-file row; cat-old has neither
+    val curated = Seq(("cat-h", "raw-1"), ("cat-t", "raw-9")).toDF("id", "rawFileId")
     val rawFiles = Seq(("raw-1", "ecmwf", "ifs-weather-forecast")).toDF("id", "source", "dataset")
-    val r = PointQuery.withLineage(samples, curated, rawFiles).collect()(0)
-    assert(r.getAs[String]("source") === "ecmwf")
-    assert(r.getAs[String]("dataset") === "ifs-weather-forecast")
+    val svc = new Service(grid, curated, rawFiles)
+    def lineageAt(ts: String, variable: String) = svc.getVariables(RequestValidation.parse(
+      "52.5", "13.4", ts, variable).toOption.get).toOption.get.head.lineage
+    assert(lineageAt("2026-01-01T12:00:00Z", "humidity") ===
+      Some(Lineage("ecmwf", "ifs-weather-forecast", "raw-1")))
+    assert(lineageAt("2026-01-01T12:00:00Z", "temperature") === None)
+    assert(lineageAt("2026-01-01T10:00:00Z", "temperature") === None)
   }
 
   test("T6: Service answers all variables in one plan, fails if ANY missing") {
@@ -100,11 +107,12 @@ class ServeSpec extends SparkSpec {
     val p2 = Seq(("p2", "temperature", Timestamp.valueOf("2026-01-02 12:30:00"), 52.5, 13.4))
       .toDF("probeId", "variable", "ts", "lat", "lon")
     assert(PointQuery.getSamples(grid, p2, h).collect().isEmpty)
-    // same via the scalar path
-    assert(PointQuery.snapTimestamp(grid, "temperature",
-      Timestamp.valueOf("2026-01-02 12:30:00"), h).isEmpty)
-    assert(PointQuery.snapTimestamp(grid, "temperature",
-      Timestamp.valueOf("2026-01-01 12:30:00"), h).contains(t12))
+    // same via the per-point path
+    assert(PointQuery.atPoint(grid, Seq("temperature"),
+      Timestamp.valueOf("2026-01-02 12:30:00"), 52.5, 13.4, h).collect().isEmpty)
+    assert(PointQuery.atPoint(grid, Seq("temperature"),
+      Timestamp.valueOf("2026-01-01 12:30:00"), 52.5, 13.4, h)
+      .collect().map(_.getAs[Timestamp]("refTimestamp")).toSeq === Seq(t12))
   }
 
   test("Service with maxStaleness answers fresh requests, 404s stale ones") {
