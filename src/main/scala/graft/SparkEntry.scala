@@ -1115,7 +1115,7 @@ object SparkEntry {
       store.append(base.filter(id % 2 === 0)
         .withColumn("insertedAt", expr("TIMESTAMP '2026-01-02 00:00:00'"))
         .withColumn("qc_flag", id % 3 === 0), extras = Seq("qc_flag"))
-      store.rawMerged().groupBy("variable").agg(
+      store.raw().groupBy("variable").agg(
         count(lit(1)).as("n"),
         count(col("qc_flag")).as("n_evolved"),
         // coalesce: a group with no evolved rows sums to NULL while the
@@ -1179,8 +1179,7 @@ object SparkEntry {
       val st = new SnapshotStore(s, s"$out/snap", "event_id")
       val ev = t(s, d, "events").select("event_id", "event_type", "value")
       val v = st.commit(ev.repartitionByRange(16, col("event_id")))
-      st.readPruned(v, 100.0, 700.0)
-        .filter(col("event_id").between(100L, 700L))
+      st.readWhere(v, col("event_id").between(100L, 700L))
         .groupBy("event_type").agg(
           count(lit(1)).as("n"),
           sum(col("value").cast("decimal(30,3)")).cast("double").as("sum_value"),
@@ -1506,12 +1505,13 @@ object SparkEntry {
       // committed sorted by event_id alone: id-zones tight, value-zones
       // useless (every file spans the whole value range)
       val v1 = st.commit(ev.repartitionByRange(16, col("event_id")))
-      val (keptV0, _) = st.pruneStatsOn(v1, "value", 10.0, 20.0)
+      val valueBand = col("value").between(10.0, 20.0)
+      val (keptV0, _) = st.planStatsWhere(v1, valueBand)
       val v2 = st.clusterZOrder(Seq("event_id", "value"), targetFiles = 16).get
-      val (keptV1, total1) = st.pruneStatsOn(v2, "value", 10.0, 20.0)
-      val (keptE1, _) = st.pruneStatsOn(v2, "event_id", 0.0, 999.0)
-      val prunedRows = st.readPrunedOn(v2, "value", 10.0, 20.0)
-        .filter(col("value").between(10.0, 20.0)).count()
+      val (keptV1, total1) = st.planStatsWhere(v2, valueBand)
+      val (keptE1, _) =
+        st.planStatsWhere(v2, col("event_id").between(0L, 999L))
+      val prunedRows = st.readWhere(v2, valueBand).count()
       st.read().groupBy("event_type").agg(
         count(lit(1)).as("n"),
         sum(col("value").cast("decimal(30,3)")).cast("double").as("sum_value"),
@@ -1538,10 +1538,9 @@ object SparkEntry {
       val ev = t(s, d, "events").select("event_id", "event_type", "value")
       // hash-scattered layout: zones on event_id are useless by design
       val v = st.commit(ev.repartition(16, col("event_id")))
-      val probes: Seq[Any] = Seq(42L, 2042L, 4242L, 7777L, 9999L)
-      val (kept, total) = st.pruneStatsEq(v, "event_id", probes)
-      st.readPrunedEq(v, "event_id", probes)
-        .filter(col("event_id").isin(probes.map(_.asInstanceOf[Long]): _*))
+      val probe = col("event_id").isin(42L, 2042L, 4242L, 7777L, 9999L)
+      val (kept, total) = st.planStatsWhere(v, probe)
+      st.readWhere(v, probe)
         .select(col("event_id"), col("event_type"), col("value"))
         .withColumn("bloom_skipped", lit(if (kept < total) 1L else 0L))
         .orderBy("event_id")
@@ -1664,10 +1663,9 @@ object SparkEntry {
         (col("event_id").cast("double") * 0.5).as("dvalue"))
       // hash-scattered layout: zones on dvalue are useless by design
       val v = st.commit(ev.repartition(16, col("event_id")))
-      val probes: Seq[Any] = Seq(21.0, 1021.0, 2121.0, 3888.5)
-      val (kept, total) = st.pruneStatsEq(v, "dvalue", probes)
-      st.readPrunedEq(v, "dvalue", probes)
-        .filter(col("dvalue").isin(probes: _*))
+      val probe = col("dvalue").isin(21.0, 1021.0, 2121.0, 3888.5)
+      val (kept, total) = st.planStatsWhere(v, probe)
+      st.readWhere(v, probe)
         .select(col("event_id"), col("event_type"), col("dvalue"))
         .withColumn("bloom_skipped", lit(if (kept < total) 1L else 0L))
         .orderBy("event_id")

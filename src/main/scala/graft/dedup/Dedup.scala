@@ -127,19 +127,6 @@ object Dedup {
           sequence(lit(0), greatest(size(ws) - n, lit(0))),
           i => concat_ws(" ", slice(ws, i + 1, lit(n))))))
 
-  /** Exact Jaccard similarity of the word sets of two texts. */
-  def wordJaccard(a: Column, b: Column): Column = {
-    val ta = array_distinct(tokens(a))
-    val tb = array_distinct(tokens(b))
-    size(array_intersect(ta, tb)).cast("double") /
-      size(array_union(ta, tb)).cast("double")
-  }
-
-  /** Exact Jaccard of `n`-gram shingle sets. */
-  def shingleJaccard(a: Column, b: Column, n: Int): Column =
-    size(array_intersect(shingles(a, n), shingles(b, n))).cast("double") /
-      size(array_union(shingles(a, n), shingles(b, n))).cast("double")
-
   /** MinHash signature: `numHashes` min-of-hash values over the shingle
     * set, as ONE native array aggregate ([[graft.functions.MinhashAgg]]) —
     * one explode + one hash-aggregate with a single buffer per group.
@@ -151,18 +138,6 @@ object Dedup {
       .select(col(idCol).as("id"), explode(shingles(col(textCol), shingleN)).as("sh"))
       .groupBy("id")
       .agg(graft.functions.MinhashAgg.minhash(col("sh"), numHashes).as("sig"))
-
-  /** Wide-column MinHash formulation (`numHashes` separate
-    * `min(xxhash64(sh, k))` aggregates) — the executable spec the native
-    * aggregate must match value-for-value.
-    */
-  def minhashSignaturesCols(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 48): DataFrame = {
-    val ex = ColOps.parallelize(df)
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), shingleN)).as("sh"))
-    val aggs = (0 until numHashes).map(k => min(xxhash64(col("sh"), lit(k))).as(s"h$k"))
-    ex.groupBy("id").agg(aggs.head, aggs.tail: _*)
-  }
 
   /** MinHash + LSH near-duplicate candidate pairs, verified with exact
     * shingle Jaccard. `bands` × `rowsPerBand` must equal `numHashes`.
@@ -860,26 +835,6 @@ object Dedup {
     */
   def simhashBitsPortable(text: Column): Column =
     graft.functions.PortableSimhash.portableSimhash(array_distinct(tokens(text)))
-
-  /** The Column-only executable SPEC of [[simhashBitsPortable]] — 64
-    * interpreted vote folds per document; kept for the DedupSpec parity
-    * test pinning the native one-buffer fold bit-identical to it (and to
-    * the SQL the oracle replays).
-    */
-  def simhashBitsPortableSpec(text: Column): Column =
-    ColOps.bindLet(
-      transform(array_distinct(tokens(text)), w => substring(md5(w), 1, 16)),
-      h =>
-        transform(sequence(lit(0), lit(63)), j => {
-          val vote = (x: Column) => {
-            val a = ascii(x.substr(floor(j / 4).cast("int") + 1, lit(1)))
-            val nib = when(a >= 97, a - 87).otherwise(a - 48)
-            val bit = floor(nib / pow(lit(2d), (j % 4).cast("double"))).cast("int") % 2
-            when(bit === 1, 1).otherwise(-1)
-          }
-          when(aggregate(h, lit(0), (acc, x) => acc + vote(x)) > 0, lit(1))
-            .otherwise(lit(0))
-        }))
 
   /** SimHash near-pairs over the portable bit-array signature: 16-bit chunk
     * pigeonhole blocking (identical geometry to [[simhashNearPairs]]).

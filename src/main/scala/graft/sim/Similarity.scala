@@ -144,12 +144,6 @@ object Similarity {
       if (((h >>> 16) & 1L) == 0L) 1.0 else -1.0
     }
 
-  /** Random-hyperplane LSH signature (one bit per plane, packed to a long). */
-  def lshSignature(emb: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (plane, i) =>
-      when(dot(emb, typedlit(plane.toSeq)) > 0.0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** Per-band key width so the expected bucket population stays near
     * `targetBucket`: 2^bandBits ≈ n / targetBucket. Clamped to [4, 24] —
     * at least 16 buckets even for tiny corpora, at most 2^24 per band

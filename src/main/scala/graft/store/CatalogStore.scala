@@ -100,31 +100,31 @@ final class CatalogStore(spark: SparkSession, val path: String, val keyCol: Stri
     val staged = path + ".upsert.tmp"
     merged.coalesce(1).write.mode("overwrite").parquet(staged)
     import org.apache.hadoop.fs.Path
-    def renameOrFail(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"upsert swap aborted: rename $src -> $dst failed; staged data intact at $staged")
+    val aborted = s"upsert swap aborted; staged data intact at $staged"
     val live = new Path(path)
     val aside = new Path(path + ".upsert.old")
     fs.delete(aside, true) // leftovers from a previously-failed swap
-    if (exists) renameOrFail(live, aside)
-    renameOrFail(new Path(staged), live)
+    if (exists) GridStore.renameOrFail(fs, live, aside, aborted)
+    GridStore.renameOrFail(fs, new Path(staged), live, aborted)
     fs.delete(aside, true)
   }
 
   /** Crash recovery for the [[upsert]] swap (the [[GridStore.recover]]
     * analog): if the live table is absent, promote the staged copy when it
     * completed (`_SUCCESS`), else the aside copy; then clear leftovers.
-    * Idempotent; a no-op on a healthy store.
+    * Idempotent; a no-op on a healthy store. A failed promote throws
+    * before anything is deleted, so both durable copies survive it.
     */
   def recover(): Unit = {
     import org.apache.hadoop.fs.Path
     val live = new Path(path)
     val staged = new Path(path + ".upsert.tmp")
     val aside = new Path(path + ".upsert.old")
+    def promote(src: Path): Unit = GridStore.renameOrFail(
+      fs, src, live, "recover aborted; no copy deleted")
     if (!fs.exists(live)) {
-      if (fs.exists(new Path(staged, "_SUCCESS"))) { fs.rename(staged, live); () }
-      else if (fs.exists(aside)) { fs.rename(aside, live); () }
+      if (fs.exists(new Path(staged, "_SUCCESS"))) promote(staged)
+      else if (fs.exists(aside)) promote(aside)
     }
     fs.delete(staged, true)
     fs.delete(aside, true)

@@ -1,9 +1,6 @@
 package graft.store
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The reference grid pipeline's storage re-expressed ON the snapshot
   * table format (r17; the r16 verdict's composition ask — the serving
@@ -62,14 +59,6 @@ final class GridSnapStore(spark: SparkSession, val path: String,
     * compactions, exactly like ReplacingMergeTree before FINAL).
     */
   def read(): DataFrame = store.read()
-
-  /** Time-bounded read through the pushdown planner: the `timestamp`
-    * range prunes day-clustered files at PLAN time (the partition-
-    * pruning role `toYYYYMMDD` plays in the reference) and still applies
-    * exactly as a filter.
-    */
-  def readWindow(lo: Timestamp, hi: Timestamp): DataFrame =
-    store.readWhere(col("timestamp") >= lit(lo) && col("timestamp") <= lit(hi))
 
   /** The FINAL view — keep-latest per sorting key (A1/W2), the
     * hash-aggregate formulation (map-side partial `max_by`, no sort).

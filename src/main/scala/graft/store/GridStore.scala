@@ -23,29 +23,11 @@ import org.apache.spark.sql.functions._
   * same deferred-merge design ClickHouse uses, re-expressed with Spark
   * primitives.
   */
-/** @param zorderCellDeg when set, files are sorted by
-  *   (variable, timestamp, morton(lat, lon)) at this cell resolution instead
-  *   of the reference's (variable, timestamp, lat, lon) — clustering spatial
-  *   neighbors into the same row groups so Parquet min/max stats prune NN
-  *   probes below the date-slice level. Read semantics are identical.
-  */
-final class GridStore(spark: SparkSession, val path: String,
-    zorderCellDeg: Option[Double] = None) {
+final class GridStore(spark: SparkSession, val path: String) {
 
   /** Dedup sorting key (reference: `init.sql:25`). */
   val keyCols: Seq[String] = Seq("variable", "timestamp", "lat", "lon")
   val versionCol = "insertedAt"
-
-  private def sortKey: Seq[org.apache.spark.sql.Column] = zorderCellDeg match {
-    case Some(cell) =>
-      import graft.functions.Spatial
-      Seq(col("variable"), col("timestamp"),
-        Spatial.morton(
-          ((col("lat") + 90.0) / cell).cast("int"),
-          ((col("lon") + 180.0) / cell).cast("int")))
-    case None =>
-      Seq(col("variable"), col("timestamp"), col("lat"), col("lon"))
-  }
 
   private def exists: Boolean =
     new org.apache.hadoop.fs.Path(path)
@@ -63,7 +45,7 @@ final class GridStore(spark: SparkSession, val path: String,
     * as the plain [[append]]; declared `extras` ride along untouched. This
     * is the `ALTER TABLE … ADD COLUMN` analog for an append-only archive:
     * files written before the column existed simply lack it and read back
-    * NULL under a merged schema ([[rawMerged]]) — no history rewrite, which
+    * NULL under a merged schema ([[raw]]) — no history rewrite, which
     * is the only evolution discipline that survives a 100 TB store.
     */
   def append(rows: DataFrame, extras: Seq[String]): Long = {
@@ -73,7 +55,7 @@ final class GridStore(spark: SparkSession, val path: String,
     withExtras
       .withColumn("date", to_date(col("timestamp")))
       .repartition(col("date"))
-      .sortWithinPartitions(sortKey: _*)
+      .sortWithinPartitions(keyCols.map(col): _*)
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("append").partitionBy("date").parquet(path)
     obs.get("n").asInstanceOf[Long]
@@ -109,11 +91,6 @@ final class GridStore(spark: SparkSession, val path: String,
   def raw(): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
-  /** Alias kept for call sites that want the evolution semantics spelled
-    * out; [[raw]] itself reads merged (see there for why).
-    */
-  def rawMerged(): DataFrame = raw()
-
   /** The FINAL view (A1): keep-latest per sorting key. ALL query paths go
     * through this. Uses the hash-aggregate formulation (map-side partial
     * `max_by`, no sort — see [[Replacing.latestAgg]]).
@@ -146,14 +123,14 @@ final class GridStore(spark: SparkSession, val path: String,
     // mergeSchema: a compaction that read a single file's footer would
     // silently DROP an evolved column (K11) from every rewritten partition —
     // the one operation that rewrites history must see the union schema.
-    val base = rawMerged()
+    val base = raw()
     val scoped = if (dates.isEmpty) base else base.filter(col("date").isin(dates: _*))
     // Writing to a staged path means the source files are never overwritten
     // mid-read — no defensive cache/materialize pass needed before the swap.
     val deduped = Replacing
       .latestAgg(scoped, keyCols, versionCol, tiebreakCols = Seq("catalogId"))
       .repartition(col("date"))
-      .sortWithinPartitions(sortKey: _*)
+      .sortWithinPartitions(keyCols.map(col): _*)
     val staged = path + ".compact.tmp"
     deduped.write.mode("overwrite").partitionBy("date").parquet(staged)
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -166,19 +143,13 @@ final class GridStore(spark: SparkSession, val path: String,
     // recovery = promote either. The aside root lives NEXT TO the store so
     // partition discovery over `path` never sees a non-partition dir.
     import org.apache.hadoop.fs.Path
-    // rename returns FALSE (it does not throw) on several filesystems; an
-    // unchecked failed rename-aside would leave the live dir in place and
-    // the next rename would move the staged dir INSIDE it (Hadoop rename
-    // onto an existing directory is move-into) — silent nesting corruption
-    def renameOrFail(src: Path, dst: Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"compact swap aborted: rename $src -> $dst failed; staged data intact at $staged")
+    import GridStore.renameOrFail
+    val aborted = s"compact swap aborted; staged data intact at $staged"
     val oldRoot = new Path(path + ".compact.old")
     fs.delete(oldRoot, true) // clear leftovers from any previously-failed swap
     if (dates.isEmpty) {
-      renameOrFail(new Path(path), oldRoot)
-      renameOrFail(new Path(staged), new Path(path))
+      renameOrFail(fs, new Path(path), oldRoot, aborted)
+      renameOrFail(fs, new Path(staged), new Path(path), aborted)
     } else {
       fs.mkdirs(oldRoot)
       dates.foreach { d =>
@@ -189,8 +160,8 @@ final class GridStore(spark: SparkSession, val path: String,
         // maintenance call naming an empty/future date must no-op for it,
         // not die mid-loop after earlier dates already swapped
         if (fs.exists(stagedPart)) {
-          if (fs.exists(live)) renameOrFail(live, new Path(oldRoot, part))
-          renameOrFail(stagedPart, live)
+          if (fs.exists(live)) renameOrFail(fs, live, new Path(oldRoot, part), aborted)
+          renameOrFail(fs, stagedPart, live, aborted)
         }
       }
       fs.delete(new Path(staged), true)
@@ -214,25 +185,28 @@ final class GridStore(spark: SparkSession, val path: String,
     *      failing that, the aside original) back;
     *   4. after the swap, before cleanup → live intact: delete leftovers.
     *
-    * Idempotent; a no-op on a healthy store.
+    * Idempotent; a no-op on a healthy store. A failed promote throws
+    * before anything is deleted, so both durable copies survive it.
     */
   def recover(): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def promote(src: Path, dst: Path): Unit = GridStore.renameOrFail(
+      fs, src, dst, "recover aborted; no copy deleted")
     val live = new Path(path)
     val staged = new Path(path + ".compact.tmp")
     val oldRoot = new Path(path + ".compact.old")
     val stagedOk = fs.exists(staged) && fs.exists(new Path(staged, "_SUCCESS"))
     if (!fs.exists(live)) {
-      if (stagedOk) { fs.rename(staged, live); () }
-      else if (fs.exists(oldRoot)) { fs.rename(oldRoot, live); () }
+      if (stagedOk) promote(staged, live)
+      else if (fs.exists(oldRoot)) promote(oldRoot, live)
     } else if (fs.exists(oldRoot)) {
       fs.listStatus(oldRoot).foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("date=") && !fs.exists(new Path(live, name))) {
           val stagedPart = new Path(staged, name)
-          if (stagedOk && fs.exists(stagedPart)) fs.rename(stagedPart, new Path(live, name))
-          else fs.rename(st.getPath, new Path(live, name))
+          if (stagedOk && fs.exists(stagedPart)) promote(stagedPart, new Path(live, name))
+          else promote(st.getPath, new Path(live, name))
         }
       }
     }
@@ -240,4 +214,19 @@ final class GridStore(spark: SparkSession, val path: String,
     fs.delete(oldRoot, true)
     ()
   }
+}
+
+private[store] object GridStore {
+
+  /** `fs.rename` that throws instead of returning false. Several
+    * filesystems report a failed rename by returning false; a swap that
+    * ignores it goes on to delete the copy it meant to keep, or renames
+    * the next directory INTO the one that failed to move (Hadoop rename
+    * onto an existing directory is move-into).
+    */
+  def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
+      context: String): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"rename $src -> $dst failed: $context")
 }

@@ -21,9 +21,12 @@ import org.apache.spark.sql.functions._
   *   - [[readAt]] gives time travel: any retained version reconstructs
   *     exactly, because data files are never mutated — a manifest IS the
   *     table state;
-  *   - [[readPruned]] consults the manifest's zone stats to skip whole
-  *     files before Spark ever plans the scan — manifest-level pruning
-  *     composes with (and happens above) Parquet row-group skipping;
+  *   - [[readWhere]] plans a Column predicate against the manifest's zone
+  *     stats and bloom sidecars to skip whole files before Spark ever
+  *     plans the scan, then applies the predicate exactly — manifest-level
+  *     pruning composes with (and happens above) Parquet row-group
+  *     skipping; [[planStatsWhere]] reports the plan's (kept, total) file
+  *     census;
   *   - [[readIncremental]] reads only the files ADDED between two versions
   *     — the CDC/backfill primitive: a downstream consumer checkpoints the
   *     last version it processed and each run touches new data only;
@@ -74,7 +77,7 @@ import org.apache.spark.sql.functions._
   * @param secondaryStats further columns to record bounds for — the
   *   Iceberg-style multi-column zone map. Pruning power on a secondary
   *   column tracks how clustered the DATA is on it (bounds are exact
-  *   either way); prune by name via [[readPrunedOn]].
+  *   either way); any [[readWhere]] predicate on the column prunes by it.
   */
 final class SnapshotStore(spark: SparkSession, val path: String,
     statsCol: String, secondaryStats: Seq[String] = Nil,
@@ -246,7 +249,7 @@ final class SnapshotStore(spark: SparkSession, val path: String,
   /** One `@` line of a manifest list: the group file name plus its
     * GROUP-LEVEL summary — file count, net (DV-masked rows excluded) row
     * count (list format v2, r15), and whole-group (min, max) per list
-    * stats column. The summary is what lets [[readPruned]] skip a group
+    * stats column. The summary is what lets [[readWhere]] skip a group
     * without opening its file, a pure append carry every previous group
     * without reading any of them, and [[snapshots]] census a version from
     * headers alone. Legacy lists carry bare `@name` lines (files = -1,
@@ -783,7 +786,7 @@ final class SnapshotStore(spark: SparkSession, val path: String,
 
   /** Z-ORDER the whole table (Delta's OPTIMIZE ZORDER BY): rewrite the
     * current state laid out along the Morton curve of `cols` — every
-    * clustered column gets tight per-file zones at once, so [[readPrunedOn]]
+    * clustered column gets tight per-file zones at once, so [[readWhere]]
     * skips files on ANY of them (a single-column sort buys exactly one).
     * `cols` must be zone-tracked (⊆ the declared stats columns): clustering
     * an untracked column would improve nothing a reader can act on.
@@ -1163,47 +1166,36 @@ final class SnapshotStore(spark: SparkSession, val path: String,
     }
 
   /** Zone-pruned merge candidates at version `v`: (delta row count, files
-    * whose tracked key bounds intersect the delta's). Key columns the
-    * manifest does not zone-track prune nothing (conservative keep); files
-    * with no recorded bounds for a tracked column are kept. Package-
-    * visible so the spec pins the skip rate.
+    * whose tracked key bounds intersect the delta's). The delta's bounds
+    * become one range conjunction planned by [[pruneWhere]]; key columns
+    * the manifest does not zone-track contribute no conjunct (conservative
+    * keep). Package-visible so the spec pins the skip rate.
     */
   private[graft] def mergeCandidates(delta: DataFrame, keyCols: Seq[String],
       v: Long): (Long, Seq[String]) = {
-    val m = readManifest(v)
-    val names = statsNamesOf(v)
-    val tracked = names.zipWithIndex.filter { case (n, _) => keyCols.contains(n) }
-    val aggExprs = count(lit(1)).as("n") +: tracked.flatMap { case (n, _) => Seq(
-      min(col(n).cast("double")), max(col(n).cast("double"))) }
+    val tracked = statsNamesOf(v).filter(keyCols.contains)
+    val aggExprs = count(lit(1)).as("n") +: tracked.flatMap(n => Seq(
+      min(col(n).cast("double")), max(col(n).cast("double"))))
     val row = delta.agg(aggExprs.head, aggExprs.tail: _*).head
     val nDelta = row.getLong(0)
-    // delta key bounds per tracked column; None = NO INFORMATION (an
-    // all-null key column aggregates to SQL NULL, a NaN poisons every
-    // comparison) — pruning may only ever act on sound bounds, anything
-    // else conservatively keeps (a NaN here once pruned EVERY candidate
-    // and turned matched keys into silent duplicates — the r13 review)
-    val dBounds: Seq[Option[(Double, Double)]] = tracked.indices.map { ti =>
+    // delta key bounds per tracked column; an all-null key column
+    // aggregates to SQL NULL and a NaN poisons every comparison — both
+    // are NO INFORMATION and add no conjunct, so pruning only ever acts on
+    // sound bounds (a NaN here once pruned EVERY candidate and turned
+    // matched keys into silent duplicates — the r13 review)
+    val ranges = tracked.indices.flatMap { ti =>
       if (row.isNullAt(1 + 2 * ti) || row.isNullAt(2 + 2 * ti)) None
       else {
         val lo = row.getDouble(1 + 2 * ti)
         val hi = row.getDouble(2 + 2 * ti)
-        if (lo.isNaN || hi.isNaN) None else Some((lo, hi))
+        if (lo.isNaN || hi.isNaN) None
+        else Some(col(tracked(ti)) >= lo && col(tracked(ti)) <= hi)
       }
     }
     val kept =
       if (nDelta == 0L) Seq.empty[String]
-      else if (tracked.isEmpty) m.map(_.file)
-      else m.filter { e =>
-        tracked.zipWithIndex.forall { case ((_, si), ti) =>
-          // a file whose manifest predates tracking of this column has no
-          // bounds recorded — conservatively kept (lift returns None)
-          val b = if (si == 0) Some((e.minS, e.maxS)) else e.extra.lift(si - 1)
-          dBounds(ti).forall { case (dLo, dHi) =>
-            b.forall { case (mn, mx) =>
-              // NaN file bounds carry no information — keep the file
-              mn.isNaN || mx.isNaN || (mx >= dLo && mn <= dHi) } }
-        }
-      }.map(_.file)
+      else pruneWhere(v, ranges.reduceOption(_ && _).getOrElse(lit(true)))
+        ._1.map(_.file)
     (nDelta, kept)
   }
 
@@ -1758,34 +1750,6 @@ final class SnapshotStore(spark: SparkSession, val path: String,
     }
   }
 
-  /** Point-lookup planning delegates to the pushdown planner: an IN
-    * predicate gets zone AND bloom pruning in one pass, with probe
-    * literals re-hashed under the table's PHYSICAL column type (xxhash64
-    * is type-sensitive — an int column probed with a long literal would
-    * otherwise miss), and conservative keeps for anything the metadata
-    * cannot answer. One planner, one soundness argument.
-    */
-  private def pruneEq(v: Long, colName: String, values: Seq[Any])
-      : (Seq[FileEntry], Seq[FileEntry], Int) = {
-    require(values.nonEmpty, "bloom probe needs at least one value")
-    pruneWhere(v, col(colName).isin(values: _*))
-  }
-
-  /** Point-lookup read: only files whose zones/bloom might contain one of
-    * `values` in `colName` are scanned. Exact superset of the matching
-    * rows — follow with the equality filter as usual.
-    */
-  def readPrunedEq(v: Long, colName: String, values: Seq[Any]): DataFrame = {
-    val (kept, schemaSrc, _) = pruneEq(v, colName, values)
-    readEntriesDf(kept, schemaSrc)
-  }
-
-  /** (files kept, total files) for a point-lookup prune. */
-  def pruneStatsEq(v: Long, colName: String, values: Seq[Any]): (Int, Int) = {
-    val (kept, _, total) = pruneEq(v, colName, values)
-    (kept.size, total)
-  }
-
   // ---- PREDICATE-PUSHDOWN SCAN PLANNING --------------------------------
   // One Column predicate drives EVERY pruning layer the manifest offers —
   // the Delta/Iceberg scan-planning discipline at the store API. Range
@@ -1927,7 +1891,9 @@ final class SnapshotStore(spark: SparkSession, val path: String,
       case other if strZoned(n) => None
       case other => asDouble(other).map { d =>
         val mn = ctx.bounds(n).map(_._1).getOrElse(Double.NaN)
-        mn.isNaN || (if (strict) mn < d else mn <= d)
+        // Spark orders NaN above every double: every non-null row is
+        // `<=` a NaN literal, so a NaN bound can never skip from below
+        d.isNaN || mn.isNaN || (if (strict) mn < d else mn <= d)
       }
     }
     def rkd(a: CNode, l: CNode, above: Boolean, strict: Boolean): Boolean =
@@ -2086,7 +2052,9 @@ final class SnapshotStore(spark: SparkSession, val path: String,
 
   /** Plan `cond` against version `v`'s metadata: group summaries + union
     * blooms first (skipped groups never open), then per-file zones +
-    * blooms. Returns (kept, schema-source, total files).
+    * blooms. Returns (kept, schema-source, total files). The store's one
+    * predicate planner: range, point and merge scans all skip files
+    * through it ([[topKEntries]] is the order-proof exception).
     */
   private def pruneWhere(v: Long, cond: org.apache.spark.sql.Column)
       : (Seq[FileEntry], Seq[FileEntry], Int) = {
@@ -2214,6 +2182,27 @@ final class SnapshotStore(spark: SparkSession, val path: String,
              h <- hashes.get((n, value)) }
         yield graft.functions.BloomSketch.containsBytes(bytes, s.hashes, h))
         .getOrElse(true)
+    // one per-file decision for ref-group and inline entries alike; an
+    // inline entry has no sidecar, so its bloom layers answer "keep"
+    def fileKeeps(fe: FileEntry, sc: Option[BloomSidecar]): Boolean = {
+      val bs = sc.flatMap(_.files.get(new Path(fe.file).getName))
+      val fCtx = new PruneCtx {
+        def bounds(n: String) = {
+          val i = eff.indexOf(n)
+          if (i < 0) None
+          else if (i == 0) Some((fe.minS, fe.maxS))
+          else fe.extra.lift(i - 1)
+        }
+        def mightContain(n: String, value: Any) = bloomHit(sc, bs)(n, value)
+        override def nullCount(n: String) = {
+          val i = eff.indexOf(n)
+          if (i < 0) None else fe.nulls.lift(i).filter(_ >= 0L)
+        }
+        override def physRows = Some(fe.rows)
+      }
+      keeps(e, fCtx, strZoned) && wideZoneKeep(fCtx) &&
+        wideKeep(sc, _ => bs, budgeted = true)
+    }
     var total = 0
     val keptGroups = info.refs.flatMap { r =>
       // sidecars only matter to equality/membership probes — a range-only
@@ -2240,48 +2229,13 @@ final class SnapshotStore(spark: SparkSession, val path: String,
       else {
         val (gNames, es) = readGroupFile(r.name)
         total += es.size
-        val aligned = alignEntries(gNames, eff, es)
-        val kept = aligned.filter { fe =>
-          val fCtx = new PruneCtx {
-            def bounds(n: String) = {
-              val i = eff.indexOf(n)
-              if (i < 0) None
-              else if (i == 0) Some((fe.minS, fe.maxS))
-              else fe.extra.lift(i - 1)
-            }
-            def mightContain(n: String, value: Any) = bloomHit(sc,
-              sc.flatMap(_.files.get(new Path(fe.file).getName)))(n, value)
-            override def nullCount(n: String) = {
-              val i = eff.indexOf(n)
-              if (i < 0) None else fe.nulls.lift(i).filter(_ >= 0L)
-            }
-            override def physRows = Some(fe.rows)
-          }
-          keeps(e, fCtx, strZoned) && wideZoneKeep(fCtx) && wideKeep(sc,
-            s => s.files.get(new Path(fe.file).getName), budgeted = true)
-        }
-        Some(Group(Some(r.name), eff, kept))
+        Some(Group(Some(r.name), eff,
+          alignEntries(gNames, eff, es).filter(fileKeeps(_, sc))))
       }
     } ++ info.inline.map { g =>
       total += g.entries.size
-      val aligned = alignEntries(g.names, eff, g.entries)
-      Group(None, eff, aligned.filter { fe =>
-        val fCtx = new PruneCtx {
-          def bounds(n: String) = {
-            val i = eff.indexOf(n)
-            if (i < 0) None
-            else if (i == 0) Some((fe.minS, fe.maxS))
-            else fe.extra.lift(i - 1)
-          }
-          def mightContain(n: String, value: Any) = true
-          override def nullCount(n: String) = {
-            val i = eff.indexOf(n)
-            if (i < 0) None else fe.nulls.lift(i).filter(_ >= 0L)
-          }
-          override def physRows = Some(fe.rows)
-        }
-        keeps(e, fCtx, strZoned) && wideZoneKeep(fCtx)
-      })
+      Group(None, eff, alignEntries(g.names, eff, g.entries)
+        .filter(fileKeeps(_, None)))
     }
     val kept = keptGroups.flatMap(_.entries)
     val schemaSrc =
@@ -2929,77 +2883,6 @@ final class SnapshotStore(spark: SparkSession, val path: String,
     readEntriesDf(m, m)
   }
 
-  /** Two-level pruning on `colName` ∈ [lo, hi]: groups whose LIST summary
-    * is provably disjoint are skipped WITHOUT opening their group file —
-    * the metadata read is O(intersecting groups), not O(table files) —
-    * then the surviving groups' entries filter at file level. Absent
-    * bounds (legacy refs, untracked columns) are conservatively kept.
-    * Returns (kept entries, schema-source entries, total file count).
-    */
-  private def pruneGroups(v: Long, colName: Option[String], lo: Double,
-      hi: Double): (Seq[FileEntry], Seq[FileEntry], Int) = {
-    val info = listInfoOf(v)
-    val eff = info.names
-    val name = colName.getOrElse(eff.head)
-    val i = eff.indexOf(name)
-    require(i >= 0,
-      s"column '$name' is not zone-tracked at version $v (tracked: $eff)")
-    // NaN bounds (a NaN in the stats column poisons min/max) carry no
-    // information — pruning may only skip on SOUND bounds
-    def refIntersects(r: RefLine): Boolean =
-      r.summary.flatMap(_.lift(i)).forall { case (mn, mx) =>
-        mn.isNaN || mx.isNaN || (mx >= lo && mn <= hi) }
-    val (cands, skipped) = info.refs.partition(refIntersects)
-    val candGroups = cands.map { r =>
-      val (gNames, es) = readGroupFile(r.name)
-      Group(Some(r.name), gNames, es)
-    } ++ info.inline
-    val aligned = candGroups.flatMap(g => alignEntries(g.names, eff, g.entries))
-    def entryIntersects(e: FileEntry): Boolean = {
-      val b = if (i == 0) Some((e.minS, e.maxS)) else e.extra.lift(i - 1)
-      b.forall { case (mn, mx) =>
-        mn.isNaN || mx.isNaN || (mx >= lo && mn <= hi) }
-    }
-    val kept = aligned.filter(entryIntersects)
-    // skipped refs always carry a recorded file count (a summary implies
-    // the v2 line format); legacy bare refs have no summary and land in
-    // the candidate set above
-    val total = aligned.size + skipped.map(_.files).sum
-    val schemaSrc =
-      if (aligned.nonEmpty) aligned
-      else skipped.headOption.map(r => readGroupFile(r.name)._2)
-        .getOrElse(Seq.empty)
-    (kept, schemaSrc, total)
-  }
-
-  /** Manifest-level zone-map pruning: only files whose [min,max] of the
-    * stats column intersects [lo,hi] are opened — and only GROUPS whose
-    * list summary intersects are even read. Callers still apply the exact
-    * predicate — zone stats are a file-skipping index, not a filter.
-    */
-  def readPruned(v: Long, lo: Double, hi: Double): DataFrame = {
-    val (kept, schemaSrc, _) = pruneGroups(v, None, lo, hi)
-    readEntriesDf(kept, schemaSrc)
-  }
-
-  /** Zone-map pruning BY COLUMN NAME over the multi-column stats: files
-    * whose recorded [min,max] for `colName` misses [lo,hi] are skipped;
-    * files carried forward from a manifest written before the column was
-    * tracked have no bounds for it and are conservatively KEPT (pruning
-    * may only ever skip provably-disjoint files). Callers still apply the
-    * exact predicate.
-    */
-  def readPrunedOn(v: Long, colName: String, lo: Double, hi: Double): DataFrame = {
-    val (kept, schemaSrc, _) = pruneGroups(v, Some(colName), lo, hi)
-    readEntriesDf(kept, schemaSrc)
-  }
-
-  /** (kept, total) for a by-name prune — the skip-rate pin. */
-  def pruneStatsOn(v: Long, colName: String, lo: Double, hi: Double): (Int, Int) = {
-    val (kept, _, total) = pruneGroups(v, Some(colName), lo, hi)
-    (kept.size, total)
-  }
-
   /** Current file census — the quantity [[compactSmall]] exists to bound.
     * Read from the list's recorded per-group counts when available (no
     * group file opens); legacy refs without counts load once.
@@ -3010,14 +2893,6 @@ final class SnapshotStore(spark: SparkSession, val path: String,
       if (r.files >= 0) r.files else readGroupFile(r.name)._2.size).sum +
       info.inline.map(_.entries.size).getOrElse(0)
   }.getOrElse(0)
-
-  /** (files surviving the prune, total files) at version `v` — the
-    * skip-rate observability a spec pins.
-    */
-  def pruneStats(v: Long, lo: Double, hi: Double): (Int, Int) = {
-    val (kept, _, total) = pruneGroups(v, None, lo, hi)
-    (kept.size, total)
-  }
 
   /** Files added by commits in `(fromV, toV]` — incremental consumption.
     * `fromV = 0` reads everything up to `toV`.

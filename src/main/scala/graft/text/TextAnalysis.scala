@@ -278,24 +278,13 @@ object TextAnalysis {
     *
     * Runs as the native [[graft.functions.RollingHash]] expression: one
     * O(n) code-point walk inside whole-stage codegen. The Column-only HOF
-    * form below is the executable spec (TextSpec pins them equal) — it is
-    * O(n²) per document because `substr(i, 1)` rescans the string.
+    * form (`TextOracle.rollingFingerprintSpec`, in TextSpec's source) is
+    * the executable spec TextSpec pins it equal to — O(n²) per document
+    * because `substr(i, 1)` rescans the string.
     */
   def rollingFingerprint(text: Column): Column =
     graft.functions.RollingHash.rollingHash(
       normalize(text))
-
-  /** The Column-only spec of [[rollingFingerprint]] (interpreted HOF fold —
-    * kept for the native-vs-spec equality test, not for production use).
-    */
-  def rollingFingerprintSpec(text: Column): Column = {
-    val norm = normalize(text)
-    graft.functions.ColOps.bindLet(norm, s =>
-      aggregate(
-        transform(sequence(lit(1), length(s)), i => ascii(s.substr(i, lit(1))).cast("long")),
-        lit(0L),
-        (h, c) => (h * 31L + c) % 1000000007L))
-  }
 
   /** Hashed-feature LINEAR CLASSIFIER inference — the fasttext-shaped
     * quality filter as one codegen'd pass: each normalized token hashes to

@@ -938,14 +938,14 @@ object Stress {
       val nIncr = st.readIncremental(v1, v2).count()
       val tIncr = (System.nanoTime() - t1) / 1e9
       val t2 = System.nanoTime()
-      val nPruned = st.readPruned(v2, 100.0, 700.0)
-        .filter(col("event_id").between(100L, 700L)).count()
+      val band = col("event_id").between(100L, 700L)
+      val nPruned = st.readWhere(v2, band).count()
       val tPrune = (System.nanoTime() - t2) / 1e9
-      val (kept, total) = st.pruneStats(v2, 100.0, 700.0)
+      val (kept, total) = st.planStatsWhere(v2, band)
       // secondary-column prune: value is NOT the clustering key, so kept
       // tracks how many files' value ranges happen to miss the window —
       // the honest "zone maps need clustering" number
-      val (kept2, _) = st.pruneStatsOn(v2, "value", 0.0, 5.0)
+      val (kept2, _) = st.planStatsWhere(v2, col("value").between(0.0, 5.0))
       // keyed-MERGE posture: a constant-size narrow-band upsert into ×k
       // history — zone pruning bounds the candidate scan to the band's
       // files, so the merge cost tracks the key blast radius, not the table
@@ -1048,7 +1048,7 @@ object Stress {
     * files. One table grows through three doublings to ~102k data files
     * (200 commits x ~512 one-row files, disjoint id ranges per commit);
     * at each doubling the row records a timed probe commit, a timed
-    * narrow-band readPruned (one commit's id band), and the metadata
+    * narrow-band readWhere (one commit's id band), and the metadata
     * bytes the last commit wrote (list + its own group) against the
     * counterfactual single-level census (every live entry re-serialized
     * per commit — what Iceberg v1 avoided with manifest lists). Flat
@@ -1081,19 +1081,14 @@ object Stress {
       val tCommit = (System.nanoTime() - t0) / 1e9
       // narrow-band pruned read over the FIRST commit's id range — the
       // matched file set is constant, so this must stay flat as the
-      // table grows or pruning is reading O(table) metadata
+      // table grows or pruning is reading O(table) metadata (group
+      // summaries skip untouched groups; no sidecar reads without
+      // equality probes)
+      val band = col("id").between(0L, filesPerCommit - 1L)
       val t1 = System.nanoTime()
-      val nPruned = st.readPruned(v, 0.0, filesPerCommit - 1.0).count()
+      val nPruned = st.readWhere(v, band).count()
       val tPrune = (System.nanoTime() - t1) / 1e9
-      // the r14 pushdown planner over the same band: its per-query
-      // metadata cost must stay flat too (group summaries skip untouched
-      // groups; no sidecar reads without equality probes)
-      val t2 = System.nanoTime()
-      val nWhere = st.readWhere(v,
-        col("id").between(0L, filesPerCommit - 1L)).count()
-      val tWhere = (System.nanoTime() - t2) / 1e9
-      require(nWhere == nPruned, s"planner/prune row divergence: $nWhere vs $nPruned")
-      val (kept, total) = st.pruneStats(v, 0.0, filesPerCommit - 1.0)
+      val (kept, total) = st.planStatsWhere(v, band)
       val manifest = f"$dir%s/snap/_manifests/v$v%05d.manifest"
       val listBytes = sz(manifest)
       val in = fs.open(new org.apache.hadoop.fs.Path(manifest))
@@ -1114,7 +1109,6 @@ object Stress {
       println(s"""{"op":"manifest_scale","commits":$committed,""" +
         s""""files_total":${st.fileCount},"groups":${refs.length},""" +
         s""""sec_commit":${num(tCommit)},"sec_prune":${num(tPrune)},""" +
-        s""""sec_readwhere":${num(tWhere)},""" +
         s""""rows_pruned":$nPruned,"files_kept":$kept,"files_listed":$total,""" +
         s""""list_bytes":$listBytes,"last_commit_meta_bytes":$lastMeta,""" +
         s""""census_versions":$nCensus,"sec_census":${num(tCensus)},""" +
@@ -1528,11 +1522,10 @@ object Stress {
       // a ~6%-wide band on the SECOND dimension (useless pre-cluster)
       val lo = side * 0.10
       val hi = side * 0.16
-      val (keptY, total) = st.pruneStatsOn(v, "y", lo, hi)
-      val (keptX, _) = st.pruneStatsOn(v, "x", lo, hi)
+      val (keptY, total) = st.planStatsWhere(v, col("y").between(lo, hi))
+      val (keptX, _) = st.planStatsWhere(v, col("x").between(lo, hi))
       val t1 = System.nanoTime()
-      val got = st.readPrunedOn(v, "y", lo, hi)
-        .filter(col("y").between(lo, hi)).count()
+      val got = st.readWhere(v, col("y").between(lo, hi)).count()
       val tPrune = (System.nanoTime() - t1) / 1e9
       println(s"""{"op":"zorder_cluster","rows":$n,""" +
         s""""sec_cluster":${num(tCluster)},"sec_prune":${num(tPrune)},""" +

@@ -41,47 +41,43 @@ class BloomSkipSpec extends SparkSpec {
       bloomCols = Seq("id"))
     val v = st.commit(scattered(0, 9999))
     val probes = Seq(42L, 4242L, 7777L)
-    val (kept, total) = st.pruneStatsEq(v, "id", probes)
+    val (kept, total) = st.planStatsWhere(v, col("id").isin(probes: _*))
     assert(total === 16)
     assert(kept < total, s"bloom must skip files ($kept/$total kept)")
-    val got = st.readPrunedEq(v, "id", probes)
-      .filter(col("id").isin(probes: _*)).collect().map(_.getLong(0)).sorted
+    val got = st.readWhere(v, col("id").isin(probes: _*))
+      .collect().map(_.getLong(0)).sorted
     assert(got.toSeq === probes.sorted, "pruned read must contain every match")
     // an absent key: whatever files survive, the filtered result is empty
-    assert(st.readPrunedEq(v, "id", Seq(123456789L))
-      .filter(col("id") === 123456789L).count() === 0L)
+    assert(st.readWhere(v, col("id") === 123456789L).count() === 0L)
   }
 
   test("string keys probe type-faithfully") {
     val st = new SnapshotStore(spark, tempDir("bloom-str") + "/snap", "id",
       bloomCols = Seq("k"))
     val v = st.commit(scattered(0, 4999))
-    val (kept, total) = st.pruneStatsEq(v, "k", Seq("k1234", "k77"))
+    val (kept, total) = st.planStatsWhere(v, col("k").isin("k1234", "k77"))
     assert(kept < total)
-    assert(st.readPrunedEq(v, "k", Seq("k1234", "k77"))
-      .filter(col("k").isin("k1234", "k77")).count() === 2L)
+    assert(st.readWhere(v, col("k").isin("k1234", "k77")).count() === 2L)
   }
 
   test("a bloom-less store still prunes via zones, and stays correct") {
     val st = new SnapshotStore(spark, tempDir("bloom-none") + "/snap", "id")
     val v = st.commit(scattered(0, 999))
-    // pruneEq delegates to the pushdown planner: id is the zone-tracked
-    // stats column, so even without a sidecar its min/max can skip
-    assert(st.readPrunedEq(v, "id", Seq(5L))
-      .filter(col("id") === 5L).count() === 1L)
+    // id is the zone-tracked stats column, so even without a sidecar its
+    // min/max can skip
+    assert(st.readWhere(v, col("id") === 5L).count() === 1L)
     // a column with NO metadata at all (neither zones nor bloom) must
     // keep every file
-    val (kept, total) = st.pruneStatsEq(v, "k", Seq("k5"))
+    val (kept, total) = st.planStatsWhere(v, col("k") === "k5")
     assert(kept === total, "no zones, no sidecar → nothing may be skipped")
-    assert(st.readPrunedEq(v, "k", Seq("k5"))
-      .filter(col("k") === "k5").count() === 1L)
+    assert(st.readWhere(v, col("k") === "k5").count() === 1L)
   }
 
   test("untracked column keeps everything") {
     val st = new SnapshotStore(spark, tempDir("bloom-untracked") + "/snap",
       "id", bloomCols = Seq("id"))
     val v = st.commit(scattered(0, 999))
-    val (kept, total) = st.pruneStatsEq(v, "k", Seq("k5"))
+    val (kept, total) = st.planStatsWhere(v, col("k") === "k5")
     assert(kept === total, "a column the sidecar does not track cannot skip")
   }
 
@@ -92,11 +88,10 @@ class BloomSkipSpec extends SparkSpec {
     val v2 = st.commit(scattered(5000, 9999))
     // one probe per batch: both must surface through the carried sidecars
     val probes = Seq(77L, 7077L)
-    val (kept, total) = st.pruneStatsEq(v2, "id", probes)
+    val (kept, total) = st.planStatsWhere(v2, col("id").isin(probes: _*))
     assert(total === 32)
     assert(kept < total)
-    assert(st.readPrunedEq(v2, "id", probes)
-      .filter(col("id").isin(probes: _*)).count() === 2L)
+    assert(st.readWhere(v2, col("id").isin(probes: _*)).count() === 2L)
   }
 
   test("rewrite survivors without sidecars are conservatively kept") {
@@ -107,11 +102,9 @@ class BloomSkipSpec extends SparkSpec {
     // this test pins the sidecar-LESS survivor keep
     st.deleteWhere(col("id") === 500L, dvMaxFraction = 0.0)
     val v = st.latestVersion.get
-    assert(st.readPrunedEq(v, "id", Seq(501L))
-      .filter(col("id") === 501L).count() === 1L,
+    assert(st.readWhere(v, col("id") === 501L).count() === 1L,
       "a survivor of the rewrite lost its sketch but must still be found")
-    assert(st.readPrunedEq(v, "id", Seq(500L))
-      .filter(col("id") === 500L).count() === 0L)
+    assert(st.readWhere(v, col("id") === 500L).count() === 0L)
   }
 
   test("expire retires sidecars with their groups") {
@@ -134,10 +127,9 @@ class BloomSkipSpec extends SparkSpec {
     st.commit(scattered(0, 999))
     st.stageWap(scattered(1000, 1999), "b1")
     val v = st.publishWap("b1")
-    val (kept, total) = st.pruneStatsEq(v, "id", Seq(1500L))
+    val (kept, total) = st.planStatsWhere(v, col("id") === 1500L)
     assert(kept < total, "the published batch's files must be bloom-skippable")
-    assert(st.readPrunedEq(v, "id", Seq(1500L))
-      .filter(col("id") === 1500L).count() === 1L)
+    assert(st.readWhere(v, col("id") === 1500L).count() === 1L)
     assert(!fsOf(st).exists(new org.apache.hadoop.fs.Path(
       st.path + "/_staged/s-b1.bloom")), "the staged sidecar retires at publish")
   }
@@ -164,20 +156,18 @@ class BloomSkipSpec extends SparkSpec {
     assert(st.read().filter(col("id") === 10042L).count() === 1L)
   }
 
-  test("int-typed key columns probe type-faithfully through readPrunedEq") {
-    // pruneEq delegates to the pushdown planner, which re-hashes probe
-    // literals under the table's physical type — a long-typed probe of an
-    // INT column must not false-negative
+  test("int-typed key columns probe type-faithfully through readWhere") {
+    // the pushdown planner re-hashes probe literals under the table's
+    // physical type — a long-typed probe of an INT column must not
+    // false-negative
     val st = new SnapshotStore(spark, tempDir("bloom-int") + "/snap", "x",
       bloomCols = Seq("n"))
     val v = st.commit(spark.range(0, 2000).select(
       (col("id") % 10).cast("double").as("x"), col("id").cast("int").as("n"))
       .repartition(8, col("n")))
-    assert(st.readPrunedEq(v, "n", Seq(1234L))
-      .filter(col("n") === 1234).count() === 1L)
-    assert(st.readPrunedEq(v, "n", Seq(1234))
-      .filter(col("n") === 1234).count() === 1L)
-    val (kept, total) = st.pruneStatsEq(v, "n", Seq(1234))
+    assert(st.readWhere(v, col("n") === 1234L).count() === 1L)
+    assert(st.readWhere(v, col("n") === 1234).count() === 1L)
+    val (kept, total) = st.planStatsWhere(v, col("n") === 1234)
     assert(kept < total)
   }
 
@@ -185,11 +175,10 @@ class BloomSkipSpec extends SparkSpec {
     val st = new SnapshotStore(spark, tempDir("bloom-multi") + "/snap", "id",
       bloomCols = Seq("id", "k"))
     val v = st.commit(scattered(0, 4999))
-    val (keptId, total) = st.pruneStatsEq(v, "id", Seq(123L))
-    val (keptK, _) = st.pruneStatsEq(v, "k", Seq("k456"))
+    val (keptId, total) = st.planStatsWhere(v, col("id") === 123L)
+    val (keptK, _) = st.planStatsWhere(v, col("k") === "k456")
     assert(keptId < total && keptK < total)
-    assert(st.readPrunedEq(v, "k", Seq("k456"))
-      .filter(col("k") === "k456").count() === 1L)
+    assert(st.readWhere(v, col("k") === "k456").count() === 1L)
   }
 
   test("sidecar cache is a bounded LRU: hot groups stay resident past the cap") {
@@ -205,20 +194,18 @@ class BloomSkipSpec extends SparkSpec {
     }
     val hot = {
       // probe v1's band repeatedly: its group is the hot entry
-      st.pruneStatsEq(vs.last, "id", Seq(5L))
+      st.planStatsWhere(vs.last, col("id") === 5L)
       sidecars(st).headOption.getOrElse(fail("no sidecars written"))
     }
     // touch every group via a broad probe, then keep re-touching the hot
     // one between colder probes — the hot sidecar must stay resident
     (0 until 3).foreach { _ =>
-      st.pruneStatsEq(vs.last, "id", Seq(5L)) // hits every group incl. hot
+      st.planStatsWhere(vs.last, col("id") === 5L) // hits every group incl. hot
     }
     val (size, _) = st.bloomCacheStats(hot)
     assert(size <= 4, s"cache must stay bounded (size $size > cap 4)")
     // with 6 groups and cap 4, SOMETHING was evicted yet probes stay exact
-    assert(st.readPrunedEq(vs.last, "id", Seq(5L))
-      .filter(col("id") === 5L).count() === 1L)
-    assert(st.readPrunedEq(vs.last, "id", Seq(5005L))
-      .filter(col("id") === 5005L).count() === 1L)
+    assert(st.readWhere(vs.last, col("id") === 5L).count() === 1L)
+    assert(st.readWhere(vs.last, col("id") === 5005L).count() === 1L)
   }
 }

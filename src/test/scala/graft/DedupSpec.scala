@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.functions.ColOps
 
 /** Dedup operators: exact, MinHash+LSH, SimHash, embedding-cosine. */
 class DedupSpec extends SparkSpec {
@@ -46,7 +48,7 @@ class DedupSpec extends SparkSpec {
   test("D2: native MinhashAgg matches the 48-column min formulation exactly") {
     val native = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 48)
       .collect().map(r => r.getAs[Long]("id") -> r.getSeq[Long](1)).toMap
-    val wide = Dedup.minhashSignaturesCols(docs, "doc_id", "text", 3, 48)
+    val wide = DedupOracle.minhashSignaturesCols(docs, "doc_id", "text", 3, 48)
       .collect().map(r => r.getAs[Long]("id") ->
         (0 until 48).map(k => r.getAs[Long](s"h$k"))).toMap
     assert(native.keySet === wide.keySet)
@@ -106,7 +108,7 @@ class DedupSpec extends SparkSpec {
       Dedup.simhashBitsPortable(col("text")).as("bits")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Int](1)).toMap
     val shSpec = rdocs.select(col("doc_id"),
-      Dedup.simhashBitsPortableSpec(col("text")).as("bits")).collect()
+      DedupOracle.simhashBitsPortableSpec(col("text")).as("bits")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Int](1)).toMap
     assert(shNative === shSpec)
   }
@@ -134,7 +136,7 @@ class DedupSpec extends SparkSpec {
       Dedup.simhashBitsPortable(col("text")).as("bits")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Int](1)).toMap
     val spec = docs.select(col("doc_id"),
-      Dedup.simhashBitsPortableSpec(col("text")).as("bits")).collect()
+      DedupOracle.simhashBitsPortableSpec(col("text")).as("bits")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getSeq[Int](1)).toMap
     assert(native === spec)
   }
@@ -512,4 +514,43 @@ class DedupSpec extends SparkSpec {
       expectedHistoryKeys = 100L)) === plain)
     assert(plain.nonEmpty && plain.length < batch.count(), "split must be non-trivial")
   }
+}
+
+/** Column-only reference formulations the native Dedup expressions are
+  * pinned against — test oracles, not production paths.
+  */
+object DedupOracle {
+  import Dedup.{shingles, tokens}
+
+  /** Wide-column MinHash formulation (`numHashes` separate
+    * `min(xxhash64(sh, k))` aggregates) — the executable spec the native
+    * aggregate must match value-for-value.
+    */
+  def minhashSignaturesCols(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, numHashes: Int = 48): DataFrame = {
+    val ex = ColOps.parallelize(df)
+      .select(col(idCol).as("id"), explode(shingles(col(textCol), shingleN)).as("sh"))
+    val aggs = (0 until numHashes).map(k => min(xxhash64(col("sh"), lit(k))).as(s"h$k"))
+    ex.groupBy("id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The Column-only executable SPEC of [[Dedup.simhashBitsPortable]] — 64
+    * interpreted vote folds per document; kept for the DedupSpec parity
+    * test pinning the native one-buffer fold bit-identical to it (and to
+    * the SQL the oracle replays).
+    */
+  def simhashBitsPortableSpec(text: Column): Column =
+    ColOps.bindLet(
+      transform(array_distinct(tokens(text)), w => substring(md5(w), 1, 16)),
+      h =>
+        transform(sequence(lit(0), lit(63)), j => {
+          val vote = (x: Column) => {
+            val a = ascii(x.substr(floor(j / 4).cast("int") + 1, lit(1)))
+            val nib = when(a >= 97, a - 87).otherwise(a - 48)
+            val bit = floor(nib / pow(lit(2d), (j % 4).cast("double"))).cast("int") % 2
+            when(bit === 1, 1).otherwise(-1)
+          }
+          when(aggregate(h, lit(0), (acc, x) => acc + vote(x)) > 0, lit(1))
+            .otherwise(lit(0))
+        }))
 }

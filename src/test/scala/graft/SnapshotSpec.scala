@@ -57,11 +57,11 @@ class SnapshotSpec extends SparkSpec {
     val st = freshStore("snap-zm")
     // range-partitioned commit → tight per-file min/max on id
     val v = st.commit(batch(0, 999).repartitionByRange(10, col("id")))
-    val (kept, total) = st.pruneStats(v, 100.0, 199.0)
+    val (kept, total) = st.planStatsWhere(v, $"id".between(100, 199))
     assert(total === 10, s"expected 10 files, saw $total")
     assert(kept < total, "prune must skip at least one file")
     assert(kept <= 3, s"a 1/10th range should keep ~1-2 files, kept $kept")
-    val exact = st.readPruned(v, 100.0, 199.0).filter($"id".between(100, 199))
+    val exact = st.readWhere(v, $"id".between(100, 199))
     assert(exact.count() === 100L)
     // prune+residual == full scan+filter
     val full = st.readAt(v).filter($"id".between(100, 199))
@@ -71,7 +71,7 @@ class SnapshotSpec extends SparkSpec {
   test("prune to an empty selection still yields the table schema") {
     val st = freshStore("snap-empty")
     val v = st.commit(batch(0, 99).repartitionByRange(4, col("id")))
-    val none = st.readPruned(v, 5000.0, 6000.0)
+    val none = st.readWhere(v, $"id".between(5000, 6000))
     assert(none.columns.toSeq === Seq("id", "k", "v"))
     assert(none.count() === 0L)
   }
@@ -304,14 +304,18 @@ class SnapshotSpec extends SparkSpec {
     val ver = st.commit(batch(0, 999).repartitionByRange(10, col("id")))
     assert(st.statsNamesOf(ver) === Seq("id", "v"))
     // v ∈ [200, 398] ⇔ id ∈ [100, 199]: one-ish file of ten
-    val (kept, total) = st.pruneStatsOn(ver, "v", 200.0, 398.0)
+    val (kept, total) = st.planStatsWhere(ver, $"v".between(200.0, 398.0))
     assert(total === 10)
     assert(kept <= 3, s"secondary prune must skip files, kept $kept")
-    val got = st.readPrunedOn(ver, "v", 200.0, 398.0)
-      .filter($"v".between(200.0, 398.0))
+    val got = st.readWhere(ver, $"v".between(200.0, 398.0))
     assert(got.count() === 100L)
-    // an untracked column name refuses rather than silently full-scanning
-    intercept[IllegalArgumentException](st.readPrunedOn(ver, "k", 0, 1))
+    // a range on a real but untracked column keeps every file and still
+    // filters exactly; a misspelt column fails analysis loudly
+    val onK = $"k".between("1", "2")
+    assert(st.planStatsWhere(ver, onK) === ((10, 10)))
+    assert(st.readWhere(ver, onK).count() === st.readAt(ver).filter(onK).count())
+    intercept[org.apache.spark.sql.AnalysisException](
+      st.readWhere(ver, $"no_such_col".between(0, 1)))
     // a store re-opened WITHOUT the secondary still reads old manifests
     val st2 = new SnapshotStore(spark, dir, "id")
     assert(st2.read().count() === 1000L)
@@ -324,20 +328,19 @@ class SnapshotSpec extends SparkSpec {
     // committed while v was UNTRACKED so they carry (-Inf, +Inf) and must
     // survive any v-prune; the new file's bounds are disjoint from the
     // probe window. So a far-away window keeps exactly ver2's files.
-    val (kept3, total3) = st3.pruneStatsOn(ver3, "v", 1e9, 2e9)
+    val (kept3, total3) = st3.planStatsWhere(ver3, $"v".between(1e9, 2e9))
     val ver2Files = st3.readIncremental(ver, ver2)
       .select(input_file_name()).distinct().count().toInt
     assert(kept3 === ver2Files,
       s"expected exactly the untracked files kept, got $kept3 of $total3")
-    assert(st3.readPrunedOn(ver3, "v", 2200.0, 2398.0)
-      .filter($"v".between(2200.0, 2398.0)).count() === 100L)
+    assert(st3.readWhere(ver3, $"v".between(2200.0, 2398.0)).count() === 100L)
     // reopening with a DIFFERENT primary re-maps bounds by name: pruning
     // on v as primary stays correct for the name-aligned history
     val st4 = new SnapshotStore(spark, dir, "v")
     val ver4 = st4.commit(batch(1200, 1249).coalesce(1))
-    val exact = st4.readPruned(ver4, 200.0, 398.0).filter($"v".between(200.0, 398.0))
+    val exact = st4.readWhere(ver4, $"v".between(200.0, 398.0))
     assert(exact.count() === 100L, "name-aligned primary bounds must not lose rows")
-    val (kept4, total4) = st4.pruneStats(ver4, 200.0, 398.0)
+    val (kept4, total4) = st4.planStatsWhere(ver4, $"v".between(200.0, 398.0))
     assert(kept4 < total4, "v-primary prune must skip v-disjoint tracked files")
   }
 
@@ -476,10 +479,10 @@ class SnapshotSpec extends SparkSpec {
     val out = fs.create(gp, true)
     out.write("#crc=0\nbogus\t2\t1\t0.0\t1.0\t10\n".getBytes("UTF-8")); out.close()
     val st2 = new SnapshotStore(spark, st.path, "id")
-    val low = st2.readPruned(2L, 0.0, 50.0).filter($"id" <= 50)
+    val low = st2.readWhere(2L, $"id".between(0, 50))
     assert(low.count() === 51L,
       "a prune over the low range must not open the disjoint high group")
-    val (kept, total) = st2.pruneStats(2L, 0.0, 50.0)
+    val (kept, total) = st2.planStatsWhere(2L, $"id".between(0, 50))
     assert(total > kept, "the high group's files count toward total via the list")
     // the full read DOES open it and must fail loudly
     intercept[IllegalArgumentException](st2.read().count())
@@ -1194,7 +1197,7 @@ class SnapshotSpec extends SparkSpec {
     // audit trail: the pre-delete version still holds everything
     assert(st.readAt(v1).count() === 1000L)
     // pruned/pushdown reads anti-apply the vectors too
-    assert(st.readPruned(v2, 0.0, 200.0).filter(col("id") % 97 === 0)
+    assert(st.readWhere(v2, col("id").between(0, 200) && col("id") % 97 === 0)
       .count() === 0L)
     assert(st.readWhere(v2, col("id") === 97L).count() === 0L)
     assert(st.readWhere(v2, col("id") === 98L).count() === 1L)
@@ -1554,19 +1557,18 @@ class SnapshotSpec extends SparkSpec {
       "id", bloomCols = Seq("id"))
     // hash-scattered: zones useless on id, only blooms can skip
     st.commit(batch(0, 9999).repartition(16, col("id")))
-    val (k0, total0) = st.pruneStatsEq(1L, "id", Seq(424242L))
+    val (k0, total0) = st.planStatsWhere(1L, col("id") === 424242L)
     assert(k0 === 0, s"absent key must bloom-skip everything pre-delete ($k0)")
     // one-row-per-file-ish scattered delete: every touched file masks MoR
     val v = st.deleteWhere(col("id") % 991 === 0).get
     val (dvFiles, _) = st.dvStats(v)
     assert(dvFiles > 0, "the delete must have attached vectors")
-    val (k1, total1) = st.pruneStatsEq(v, "id", Seq(424242L))
+    val (k1, total1) = st.planStatsWhere(v, col("id") === 424242L)
     assert(total1 === total0)
     assert(k1 === 0,
       s"carried sketches must keep skipping after the DV attach ($k1/$total1)")
     // and a live key still reads exactly (no false skip from the carry)
-    assert(st.readPrunedEq(v, "id", Seq(4242L))
-      .filter(col("id") === 4242L).count() === 1L)
+    assert(st.readWhere(v, col("id") === 4242L).count() === 1L)
   }
 
   test("expire reclaims vectors of expired versions; live ones survive") {
@@ -1860,14 +1862,12 @@ class BloomFoldSpec extends SparkSpec {
     val v = st.latestVersion.get
     val present: Seq[Any] = Seq(3L, 17L, 63L)
     val absent: Seq[Any] = Seq(1000003L, 2000017L)
-    val (keptP, _) = st.pruneStatsEq(v, "k", present)
+    val (keptP, _) = st.planStatsWhere(v, col("k").isin(present: _*))
     assert(keptP > 0, "present keys must keep files")
-    val got = st.readPrunedEq(v, "k", present)
-      .filter(col("k").isin(present.map(_.asInstanceOf[Long]): _*))
-      .count()
+    val got = st.readWhere(v, col("k").isin(present: _*)).count()
     assert(got === 50000L / 64 * present.size + present.count(_.asInstanceOf[Long] < 50000 % 64),
       "pruned-eq read must return every matching row")
-    val (keptA, totalA) = st.pruneStatsEq(v, "k", absent)
+    val (keptA, totalA) = st.planStatsWhere(v, col("k").isin(absent: _*))
     assert(keptA <= totalA) // bloom may false-positive, never false-negative
   }
 }

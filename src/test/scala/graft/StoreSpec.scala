@@ -55,14 +55,14 @@ class StoreSpec extends SparkSpec {
     store.append(
       gridRows(t1, 100.0).withColumn("qc_flag", $"variable" === "pm2p5"),
       extras = Seq("qc_flag"))
-    val merged = store.rawMerged()
+    val merged = store.raw()
     assert(merged.columns.contains("qc_flag"))
     assert(merged.filter($"qc_flag".isNull).count() === 3L,
       "pre-evolution files must surface NULL under the merged schema")
     assert(merged.filter($"qc_flag" === true).count() === 2L)
     // the ONE operation that rewrites history must not drop the column
     store.compact()
-    val after = store.rawMerged()
+    val after = store.raw()
     assert(after.columns.contains("qc_flag"),
       "compaction must preserve evolved columns")
     // keep-latest picked the evolved (t1) versions, so no NULLs remain
@@ -271,15 +271,63 @@ class StoreSpec extends SparkSpec {
     assert(store.raw().count() === 3L, "live data untouched")
   }
 
-  test("z-ordered store answers identically to the primary-key-sorted store") {
-    val plain = new GridStore(spark, tempDir("store") + "/grid")
-    val zord = new GridStore(spark, tempDir("storez") + "/grid", zorderCellDeg = Some(0.1))
-    Seq(plain, zord).foreach { s => s.append(gridRows(t0, 1.0)); s.append(gridRows(t1, 9.0)); s.compact() }
-    val a = plain.finalView().select("variable", "timestamp", "lat", "lon", "value")
-      .collect().map(_.toSeq).toSet
-    val b = zord.finalView().select("variable", "timestamp", "lat", "lon", "value")
-      .collect().map(_.toSeq).toSet
-    assert(a === b)
+  /** The store path re-addressed through [[NoRenameFs]]: same files on
+    * disk, but every rename reports failure by returning false.
+    */
+  private def noRename(path: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.norename.impl", classOf[NoRenameFs].getName)
+    "norename://" + path
+  }
+
+  test("T5: GridStore.recover throws on a failed promote and keeps both copies") {
+    import org.apache.hadoop.fs.Path
+    val store = new GridStore(spark, tempDir("store") + "/grid")
+    store.append(gridRows(t0, 1.0))
+    store.append(gridRows(t1, 100.0))
+    val fs = new Path(store.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new Path(store.path + ".compact.tmp")
+    val aside = new Path(store.path + ".compact.old")
+    // window 2: compacted copy staged, live renamed aside, rename-in lost
+    Replacing.latestAgg(store.raw(), store.keyCols, store.versionCol,
+      tiebreakCols = Seq("catalogId"))
+      .write.partitionBy("date").parquet(staged.toString)
+    assert(fs.rename(new Path(store.path), aside))
+    intercept[java.io.IOException](new GridStore(spark, noRename(store.path)).recover())
+    assert(fs.exists(new Path(staged, "_SUCCESS")) && fs.exists(aside),
+      "a failed promote must not delete either durable copy")
+    assert(!fs.exists(new Path(store.path)))
+    // window 3: live back, one date moved aside and never replaced
+    store.recover()
+    assert(store.raw().count() === 3L)
+    val part = "date=2026-01-01"
+    fs.mkdirs(aside)
+    assert(fs.rename(new Path(store.path, part), new Path(aside, part)))
+    intercept[java.io.IOException](new GridStore(spark, noRename(store.path)).recover())
+    assert(fs.exists(new Path(aside, part)),
+      "a failed per-date promote must keep the aside partition")
+    store.recover()
+    assert(store.raw().count() === 3L)
+    assert(!fs.exists(aside))
+  }
+
+  test("K4: CatalogStore.recover throws on a failed promote and keeps both copies") {
+    import org.apache.hadoop.fs.Path
+    val cat = new CatalogStore(spark, tempDir("cat") + "/curated", "id")
+    cat.upsert(Seq(("c-1", "raw-1", 1L)).toDF("id", "rawFileId", "v"), "v")
+    val fs = new Path(cat.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new Path(cat.path + ".upsert.tmp")
+    val aside = new Path(cat.path + ".upsert.old")
+    // crash window: the completed staged copy and the aside copy, no live
+    cat.read().write.parquet(staged.toString)
+    assert(fs.rename(new Path(cat.path), aside))
+    intercept[java.io.IOException](
+      new CatalogStore(spark, noRename(cat.path), "id").recover())
+    assert(fs.exists(new Path(staged, "_SUCCESS")) && fs.exists(aside),
+      "a failed promote must not delete either durable copy")
+    cat.recover()
+    assert(cat.read().collect()(0).getString(1) === "raw-1")
+    assert(!fs.exists(staged) && !fs.exists(aside))
   }
 
   test("latestAgg (hash-agg form) equals latest (window form) row-for-row") {
@@ -317,4 +365,14 @@ class StoreSpec extends SparkSpec {
       "id", Seq("lang", "n")).collect()
     assert(flip(0).getAs[String]("action") === "update")
   }
+}
+
+/** A local filesystem under its own `norename://` scheme whose rename
+  * fails the way several Hadoop filesystems do: by returning false.
+  */
+class NoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def getScheme: String = "norename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = false
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.text.TextAnalysis
@@ -153,7 +154,7 @@ class TextSpec extends SparkSpec {
       "", "   ", "a", "1 2 3 4 5 6 7 8 9 0", "x" * 500)
     val rows = texts.toDF("text")
       .select(TextAnalysis.rollingFingerprint(col("text")).as("native"),
-        TextAnalysis.rollingFingerprintSpec(col("text")).as("spec"))
+        TextOracle.rollingFingerprintSpec(col("text")).as("spec"))
       .collect()
     rows.zip(texts).foreach { case (r, t) =>
       assert(r.getLong(0) === r.getLong(1), s"mismatch on '$t'")
@@ -285,5 +286,24 @@ class TextSpec extends SparkSpec {
     assert(e(1) === ((2L, 2L, 3L, 3L, 6L, 2.0)))
     // doc3: 'a' and 'b2' cost 1 each outside the vocab; only 'the' is alpha
     assert(e(2) === ((3L, 3L, 3L, 1L, 3L, 3.0)))
+  }
+}
+
+/** Column-only reference formulation the native rolling hash is pinned
+  * against — a test oracle, not a production path.
+  */
+object TextOracle {
+  import TextAnalysis.normalize
+
+  /** The Column-only spec of [[TextAnalysis.rollingFingerprint]] (interpreted HOF fold —
+    * kept for the native-vs-spec equality test, not for production use).
+    */
+  def rollingFingerprintSpec(text: Column): Column = {
+    val norm = normalize(text)
+    graft.functions.ColOps.bindLet(norm, s =>
+      aggregate(
+        transform(sequence(lit(1), length(s)), i => ascii(s.substr(i, lit(1))).cast("long")),
+        lit(0L),
+        (h, c) => (h * 31L + c) % 1000000007L))
   }
 }

@@ -219,10 +219,10 @@ class WapSpec extends SparkSpec {
     val v = publisher.publishWap("b")
     // id ∈ [600, 650]: a v-labeled id-bound would prune files that DO
     // contain these rows (v of those rows is 1200..1300)
-    assert(publisher.readPrunedOn(v, "id", 600.0, 650.0)
-      .filter(col("id").between(600, 650)).count() === 51L)
-    assert(publisher.readPrunedOn(v, "v", 1200.0, 1300.0)
-      .filter(col("v").between(1200.0, 1300.0)).count() === 51L)
+    assert(publisher.readWhere(v, col("id").between(600, 650))
+      .count() === 51L)
+    assert(publisher.readWhere(v, col("v").between(1200.0, 1300.0))
+      .count() === 51L)
   }
 
   test("a crashed discard's orphan bloom sidecar cannot wedge a re-stage") {

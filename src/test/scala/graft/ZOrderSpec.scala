@@ -89,17 +89,16 @@ class ZOrderSpec extends SparkSpec {
     val grid = spark.range(0, 10000).select(
       (col("id") % 100).as("x"), floor(col("id") / 100).as("y"))
     val v1 = st.commit(grid.repartitionByRange(16, col("x")))
-    val (keptY0, total0) = st.pruneStatsOn(v1, "y", 10.0, 15.0)
+    val (keptY0, total0) = st.planStatsWhere(v1, col("y").between(10.0, 15.0))
     assert(keptY0 === total0, "single-column layout cannot prune the other dim")
     val v2 = st.clusterZOrder(Seq("x", "y"), targetFiles = 16).get
-    val (keptX, totalX) = st.pruneStatsOn(v2, "x", 10.0, 15.0)
-    val (keptY, totalY) = st.pruneStatsOn(v2, "y", 10.0, 15.0)
+    val (keptX, totalX) = st.planStatsWhere(v2, col("x").between(10.0, 15.0))
+    val (keptY, totalY) = st.planStatsWhere(v2, col("y").between(10.0, 15.0))
     assert(totalX === 16 && totalY === 16)
     assert(keptX < totalX, s"x must still prune after clustering ($keptX/$totalX)")
     assert(keptY < totalY, s"y must prune after clustering ($keptY/$totalY)")
     // and the pruned reads are correct, not merely smaller
-    assert(st.readPrunedOn(v2, "y", 10.0, 15.0)
-      .filter(col("y").between(10, 15)).count() === 600L)
+    assert(st.readWhere(v2, col("y").between(10, 15)).count() === 600L)
     assert(st.readAt(v2).count() === 10000L)
   }
 
