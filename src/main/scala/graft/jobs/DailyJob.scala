@@ -2,8 +2,11 @@ package graft.jobs
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{GridFunctions, UuidV7}
 import graft.sources.{Grib, GribReader}
@@ -68,25 +71,31 @@ final class DailyJob(
 
     // ── transform (S1/S2 → C1..C3 → K1/K4) ──
     val decoded = Grib.toDataFrame(spark, reader.open(path).toSeq)
-    // materialize the transform ONCE: four downstream actions (grid append,
-    // curated upsert, touched-dates collect, meta collect) would otherwise
-    // each re-run the full pivot/join pipeline — ~4x the day's cluster work
-    val rows = transform(decoded, insertedAt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = grids.append(rows)
-      val curatedRows = Transforms.curatedRecords(rows, runId, insertedAt)
-      curated.upsert(curatedRows, "createdAt")
+    // one pass: the grid write is the run's only evaluation of the
+    // transform, and it reports the run's slices and touched dates as
+    // observed metrics (`to_date` in the session time zone, as the `date`
+    // partition column) — no persist, no second job over the rows
+    val sliceCols = Seq("catalogId", "variable", "unit", "timestamp")
+    val obs = Observation()
+    val rows = transform(decoded, insertedAt).observe(obs,
+      collect_set(struct(sliceCols.map(col): _*)).as("slices"),
+      collect_set(to_date(col("timestamp"))).as("dates"))
+    val n = grids.append(rows)
+    val seen = obs.get
+    val slices = seen("slices").asInstanceOf[scala.collection.Seq[Row]].toSeq
+    val touched = seen("dates").asInstanceOf[scala.collection.Seq[Date]].toSeq
 
-      // ── optimize (K5): compact only the dates this run touched ──
-      val touched = rows.select(to_date(col("timestamp")).as("d")).distinct()
-        .as[Date].collect().toSeq
-      grids.compact(touched)
+    val sliceSchema = StructType(sliceCols.map(rows.schema(_)))
+    val curatedRows = Transforms.curatedRecords(
+      spark.createDataFrame(slices.asJava, sliceSchema), runId, insertedAt)
+    curated.upsert(curatedRows, "createdAt")
 
-      val meta = curatedRows.select("id", "variable").collect()
-      RunResult(runId, n,
-        meta.map(_.getString(1)).distinct.sorted.toSeq,
-        meta.map(_.getString(0)).sorted.toSeq)
-    } finally { rows.unpersist(); () }
+    // ── optimize (K5): compact only the dates this run touched; a run that
+    // stored nothing touched none (compact(Nil) would rewrite every date) ──
+    if (touched.nonEmpty) grids.compact(touched)
+
+    RunResult(runId, n,
+      slices.map(_.getString(1)).distinct.sorted,
+      slices.map(_.getString(0)).sorted)
   }
 }

@@ -60,24 +60,42 @@ object Grib {
 
   /** Flatten one message to grid points (boundary normalization applied). */
   def messagePoints(m: GribMessage): IndexedSeq[GridPoint] = {
-    require(m.values.length == m.lats.length && m.lats.length == m.lons.length,
-      s"ragged grid in ${m.variableName}@${m.timestamp}")
+    requireSameLength(m)
     m.values.indices.map { i =>
       GridPoint(m.variableName, m.unit, m.timestamp,
         m.lats(i).toFloat, normalizeLon(m.lons(i)).toFloat, m.values(i))
     }
   }
 
+  private def requireSameLength(m: GribMessage): Unit =
+    require(m.values.length == m.lats.length && m.lats.length == m.lons.length,
+      s"ragged grid in ${m.variableName}@${m.timestamp}")
+
   /** Explode decoded messages into the long row-per-gridpoint DataFrame the
-    * rest of the engine consumes. Each message becomes `values.length` rows.
-    * Decoding happens message-at-a-time on the driver (messages are ≤~1M
-    * points); the exploded frame is immediately distributed. For decode ON
-    * the executors (the 100 TB ingest shape), see
+    * rest of the engine consumes. Each message becomes `values.length` rows,
+    * in message order. Decoding happens message-at-a-time on the driver
+    * (messages are ≤~1M points); each message's arrays are then cut into
+    * about `defaultParallelism` chunks and the explode runs on the
+    * executors, so the plan holds an RDD scan rather than a data-sized
+    * local relation the analyzer and optimizer would walk on every query.
+    * For decode ON the executors too (the 100 TB ingest shape), see
     * [[graft.streaming.EventStream.gribLandingStream]].
     */
   def toDataFrame(spark: SparkSession, messages: Seq[GribMessage]): DataFrame = {
     import spark.implicits._
-    messages.flatMap(messagePoints)
-      .toDF("variable", "unit", "timestamp", "lat", "lon", "value")
+    val sc = spark.sparkContext
+    val parts = sc.defaultParallelism
+    val chunks = messages.flatMap { m =>
+      requireSameLength(m)
+      val n = m.values.length
+      val step = math.max(1, (n + parts - 1) / parts)
+      (0 until n by step).map { lo =>
+        val hi = math.min(n, lo + step)
+        SyntheticMessage(m.variableName, m.unit, m.timestamp,
+          m.values.slice(lo, hi), m.lats.slice(lo, hi), m.lons.slice(lo, hi))
+      }
+    }
+    sc.parallelize(chunks, math.max(1, math.min(parts, chunks.length)))
+      .flatMap(messagePoints).toDF()
   }
 }

@@ -2,7 +2,7 @@ package graft.transform
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GridFunctions, UuidV7}
@@ -19,9 +19,11 @@ import graft.functions.{GridFunctions, UuidV7}
 object Transforms {
 
   /** Assign one UUIDv7 per (variable, timestamp) slice — the reference
-    * allocates ids per grid before explode (`defs/assets.py:206,390-416`), so
-    * a driver loop over *distinct slices* (a handful per day, never data-sized)
-    * is faithful and deterministic; rows get their id via broadcast join.
+    * allocates ids per grid before explode (`defs/assets.py:206,390-416`).
+    * The id is a pure function of the slice ([[UuidV7.sliceId]], a native
+    * expression), so it is minted row by row inside the plan: building the
+    * frame runs no Spark job and the plan has no join. Rows with a NULL
+    * variable or timestamp belong to no slice and are dropped.
     *
     * Ids derive from the slice itself (variable + slice timestamp), NOT from
     * `insertedAt`: reprocessing a partition mints the same ids, so the K4
@@ -29,18 +31,10 @@ object Transforms {
     * idempotent across re-runs (T4 — "delete the data, re-run the ETL, same
     * results", `docs/layer-2-transformation.md:307-313`).
     */
-  def withCatalogIds(df: DataFrame, insertedAt: Timestamp): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val slices = df.select("variable", "timestamp").distinct()
-      .as[(String, Timestamp)].collect().sortBy(s => (s._1, s._2.getTime))
-    val ids = slices.map { case (v, ts) =>
-      (v, ts, UuidV7.deterministic(ts.getTime, (v.hashCode.toLong << 20) ^ ts.getTime))
-    }
-    val idDf = spark.createDataFrame(ids.toIndexedSeq).toDF("variable", "timestamp", "catalogId")
-    df.join(broadcast(idDf), Seq("variable", "timestamp"))
+  def withCatalogIds(df: DataFrame, insertedAt: Timestamp): DataFrame =
+    df.filter(col("variable").isNotNull && col("timestamp").isNotNull)
+      .withColumn("catalogId", UuidV7.sliceId(col("variable"), col("timestamp")))
       .withColumn("insertedAt", lit(insertedAt))
-  }
 
   /** CAMS pipeline core (reference: `defs/assets.py:143-239`): particulate
     * grids arrive in kg m⁻³ and are converted ×1e9 to µg/m³ (C1), then

@@ -70,14 +70,4 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS b_events")
     }
   }
-
-  private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.sql.{Date, Timestamp}
 
 import graft.jobs.DailyJob
-import graft.sources.{GribMessage, GribReader, SyntheticMessage}
+import graft.sources.{Grib, GribMessage, GribReader, SyntheticMessage}
 import graft.store.{CatalogStore, GridStore}
 import graft.transform.Transforms
 
@@ -11,12 +11,14 @@ import graft.transform.Transforms
   * idempotency claim ("delete the data, re-run the ETL, same results",
   * `docs/layer-2-transformation.md:307-313`).
   */
-class JobsSpec extends SparkSpec {
+object JobsSpec {
+  val date: Date = Date.valueOf("2026-01-01")
+  val ts: Timestamp = Timestamp.valueOf("2026-01-01 00:00:00")
 
-  private val date = Date.valueOf("2026-01-01")
-  private val ts = Timestamp.valueOf("2026-01-01 00:00:00")
-
-  private def reader: GribReader = new GribReader {
+  /** ECMWF input: temperature + dewpoint at two points inside the Europe
+    * clip — 6 stored rows (2 points × t, td, rh).
+    */
+  val reader: GribReader = new GribReader {
     def open(path: String): Iterator[GribMessage] = Seq[GribMessage](
       SyntheticMessage("temperature", "K", ts,
         values = Array(290.0, 291.0), lats = Array(50.0, 50.0), lons = Array(10.0, 10.25)),
@@ -24,6 +26,10 @@ class JobsSpec extends SparkSpec {
         values = Array(285.0, 286.0), lats = Array(50.0, 50.0), lons = Array(10.0, 10.25))
     ).iterator
   }
+}
+
+class JobsSpec extends SparkSpec {
+  import JobsSpec._
 
   test("daily run materializes grid + catalogs; re-run is idempotent") {
     val base = tempDir("job")
@@ -184,6 +190,37 @@ class JobsSpec extends SparkSpec {
       import org.apache.spark.sql.functions._
       assert(grids.finalView().filter(col("value").isNaN).count() === 0L)
     } finally java.nio.file.Files.delete(gribFile)
+  }
+
+  test("a run that stores no rows compacts nothing") {
+    val base = tempDir("jobempty")
+    val grids = new GridStore(spark, s"$base/grid")
+    val rawFiles = new CatalogStore(spark, s"$base/raw_files", "id")
+    val curated = new CatalogStore(spark, s"$base/curated", "id")
+    val job = new DailyJob(spark, grids, rawFiles, curated)
+    job.run("ecmwf", "ifs-weather-forecast", date, reader, "unused",
+      Transforms.ecmwf, insertedAt = ts)
+    // an uncompacted second version of date A, as a crashed run leaves it
+    grids.append(Transforms.ecmwf(
+      Grib.toDataFrame(spark, reader.open("unused").toSeq),
+      Timestamp.valueOf("2026-01-01 06:00:00")))
+    assert(grids.raw().count() === 12L)
+    // date B: every point lies outside the Europe clip
+    val tsB = Timestamp.valueOf("2026-01-02 00:00:00")
+    val outside = new GribReader {
+      def open(path: String): Iterator[GribMessage] = Seq[GribMessage](
+        SyntheticMessage("temperature", "K", tsB,
+          values = Array(290.0, 291.0), lats = Array(0.0, 0.0), lons = Array(100.0, 100.25)),
+        SyntheticMessage("dewpoint", "K", tsB,
+          values = Array(285.0, 286.0), lats = Array(0.0, 0.0), lons = Array(100.0, 100.25))
+      ).iterator
+    }
+    val r = job.run("ecmwf", "ifs-weather-forecast", Date.valueOf("2026-01-02"),
+      outside, "unused", Transforms.ecmwf, insertedAt = tsB)
+    assert(r.insertedRows === 0L)
+    assert(r.variablesProcessed.isEmpty && r.curatedKeys.isEmpty)
+    assert(grids.raw().count() === 12L, "an empty run must not compact date A")
+    assert(grids.finalView().count() === 6L)
   }
 
   test("T5 fail-fast: a failing decode leaves grid and curated catalogs untouched") {

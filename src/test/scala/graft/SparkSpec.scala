@@ -19,4 +19,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `f` with the given session confs set, then restores them. */
+  def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -58,14 +58,4 @@ class VectorExprSpec extends SparkSpec {
       if (id == 4L) assert(native === 11.0) else assert(native === null)
     }
   }
-
-  private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }
