@@ -1,6 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** The curated grid store: date-partitioned Parquet with
@@ -14,14 +16,23 @@ import org.apache.spark.sql.functions._
   *     `sortWithinPartitions` at write time, giving Parquet min/max row-group
   *     skipping on variable/timestamp slices;
   *   - `ReplacingMergeTree(inserted_at)` + `FINAL` → [[Replacing.latest]]
-  *     applied by [[finalView]];
+  *     applied by [[finalView]], partition by partition (ClickHouse's
+  *     `do_not_merge_across_partitions_select_final`);
   *   - `OPTIMIZE TABLE … FINAL` (K5, `clickhouse_grid_store.py:70-72`) →
-  *     [[compact]], which rewrites affected date partitions deduped.
+  *     [[compact]], which rewrites affected date partitions deduped and
+  *     marks them merged by naming their data files `final-…`.
   *
   * Scale posture: appends never read existing data; dedup cost is deferred to
-  * reads (pruned to the dates touched) until compaction amortizes it — the
-  * same deferred-merge design ClickHouse uses, re-expressed with Spark
-  * primitives.
+  * reads, and only for the dates that hold appended (`part-…`) files, until
+  * compaction amortizes it — the same deferred-merge design ClickHouse uses,
+  * re-expressed with Spark primitives.
+  *
+  * Exactness of the merged mark: a date whose data files are all `final-`
+  * files holds exactly [[Replacing.latestAgg]]'s output for its rows (same
+  * tiebreak, float keys normalized by the aggregate), so FINAL reads it as
+  * is. This relies on every version of a key sitting in one date partition —
+  * `date` is derived from `timestamp`, a key column, on every write here —
+  * which is the same assumption a date-scoped [[compact]] makes.
   */
 final class GridStore(spark: SparkSession, val path: String) {
 
@@ -92,11 +103,13 @@ final class GridStore(spark: SparkSession, val path: String) {
     spark.read.option("mergeSchema", "true").parquet(path)
 
   /** The FINAL view (A1): keep-latest per sorting key. ALL query paths go
-    * through this. Uses the hash-aggregate formulation (map-side partial
-    * `max_by`, no sort — see [[Replacing.latestAgg]]).
+    * through this. Dates marked merged by [[compact]] are read as they are;
+    * the others go through the hash-aggregate formulation (map-side partial
+    * `max_by`, no sort — see [[Replacing.latestAgg]]). When every date is
+    * merged the plan has no aggregate; when none is, it is the aggregate
+    * over the whole store.
     */
-  def finalView(): DataFrame =
-    Replacing.latestAgg(raw(), keyCols, versionCol, tiebreakCols = Seq("catalogId"))
+  def finalView(): DataFrame = perPartitionFinal(raw(), lit(true))
 
   /** FINAL view bounded to a timestamp window, applied BELOW the dedup
     * aggregate as both a `date` predicate (→ Parquet partition pruning: with
@@ -107,11 +120,37 @@ final class GridStore(spark: SparkSession, val path: String) {
     * dedup is exact: `timestamp` is part of the dedup key, so versions of a
     * key never straddle the window boundary.
     */
-  def finalView(lo: java.sql.Timestamp, hi: java.sql.Timestamp): DataFrame = {
-    val bounded = raw()
-      .filter(col("date").between(to_date(lit(lo)), to_date(lit(hi))) &&
-        col("timestamp").between(lit(lo), lit(hi)))
-    Replacing.latestAgg(bounded, keyCols, versionCol, tiebreakCols = Seq("catalogId"))
+  def finalView(lo: java.sql.Timestamp, hi: java.sql.Timestamp): DataFrame =
+    perPartitionFinal(raw(), col("date").between(to_date(lit(lo)), to_date(lit(hi))) &&
+      col("timestamp").between(lit(lo), lit(hi)))
+
+  private def dedup(rows: DataFrame): DataFrame =
+    Replacing.latestAgg(rows, keyCols, versionCol, tiebreakCols = Seq("catalogId"))
+
+  /** FINAL over `r.filter(cut)`, deduplicating only the unmerged dates.
+    * The dates are classified from `r`'s own file listing — the index its
+    * scan reads — so a file appended after `r` was built cannot land in the
+    * wrong branch. The dedup branch is cut by `date IN (unmerged dates)`;
+    * the merged branch by its null-safe negation, so the NULL-date partition
+    * (rows with a NULL timestamp) lands in exactly one branch.
+    */
+  private def perPartitionFinal(r: DataFrame, cut: Column): DataFrame = {
+    val byDate = r.inputFiles.toSeq.map(new Path(_))
+      .groupBy(_.getParent.getName.stripPrefix("date="))
+    val unmerged = byDate.collect {
+      case (d, files) if !files.forall(_.getName.startsWith(GridStore.MergedPrefix)) => d
+    }.toSeq
+    // latestAgg's column order: the keys, then the rest as stored
+    val columns = (keyCols ++ r.columns.filterNot(keyCols.contains)).map(col)
+    if (unmerged.isEmpty) return r.filter(cut).select(columns: _*)
+    if (unmerged.size == byDate.size) return dedup(r.filter(cut))
+    val (nullDate, dated) = unmerged.partition(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+    val inUnmerged = Seq(
+      Option.when(dated.nonEmpty)(col("date").isin(dated.map(java.sql.Date.valueOf): _*)),
+      Option.when(nullDate.nonEmpty)(col("date").isNull)
+    ).flatten.reduce(_ || _)
+    dedup(r.filter(cut && inUnmerged))
+      .unionByName(r.filter(cut && !coalesce(inUnmerged, lit(false))).select(columns: _*))
   }
 
   /** K5 — compaction: rewrite date partitions with dedup materialized
@@ -127,14 +166,23 @@ final class GridStore(spark: SparkSession, val path: String) {
     val scoped = if (dates.isEmpty) base else base.filter(col("date").isin(dates: _*))
     // Writing to a staged path means the source files are never overwritten
     // mid-read — no defensive cache/materialize pass needed before the swap.
-    val deduped = Replacing
-      .latestAgg(scoped, keyCols, versionCol, tiebreakCols = Seq("catalogId"))
+    val deduped = dedup(scoped)
       .repartition(col("date"))
       .sortWithinPartitions(keyCols.map(col): _*)
     val staged = path + ".compact.tmp"
     deduped.write.mode("overwrite").partitionBy("date").parquet(staged)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import GridStore.renameOrFail
+    val aborted = s"compact swap aborted; staged data intact at $staged"
+    // The merged mark (read by finalView): every staged data file is renamed
+    // part-… → final-… before any live partition moves, so a failed rename
+    // leaves the live store untouched. On a checksum filesystem the .crc
+    // sidecar moves with its file.
+    for {
+      part <- fs.listStatus(new Path(staged)) if part.isDirectory
+      file <- fs.listStatus(part.getPath).map(_.getPath) if file.getName.startsWith("part-")
+    } renameOrFail(fs, file,
+      new Path(part.getPath, GridStore.MergedPrefix + file.getName.stripPrefix("part-")), aborted)
     // T5 swap discipline: the live data is renamed ASIDE before the staged
     // data is renamed in — at no instant is the only surviving copy in the
     // staging dir (delete-then-rename would strand it there on a crash
@@ -142,9 +190,6 @@ final class GridStore(spark: SparkSession, val path: String) {
     // path briefly absent but two durable copies (.compact.old + staging);
     // recovery = promote either. The aside root lives NEXT TO the store so
     // partition discovery over `path` never sees a non-partition dir.
-    import org.apache.hadoop.fs.Path
-    import GridStore.renameOrFail
-    val aborted = s"compact swap aborted; staged data intact at $staged"
     val oldRoot = new Path(path + ".compact.old")
     fs.delete(oldRoot, true) // clear leftovers from any previously-failed swap
     if (dates.isEmpty) {
@@ -186,10 +231,11 @@ final class GridStore(spark: SparkSession, val path: String) {
     *   4. after the swap, before cleanup → live intact: delete leftovers.
     *
     * Idempotent; a no-op on a healthy store. A failed promote throws
-    * before anything is deleted, so both durable copies survive it.
+    * before anything is deleted, so both durable copies survive it. A
+    * promoted staged partition whose files were not yet renamed `final-…`
+    * reads as unmerged: [[finalView]] deduplicates it, so it stays exact.
     */
   def recover(): Unit = {
-    import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def promote(src: Path, dst: Path): Unit = GridStore.renameOrFail(
       fs, src, dst, "recover aborted; no copy deleted")
@@ -217,6 +263,11 @@ final class GridStore(spark: SparkSession, val path: String) {
 }
 
 private[store] object GridStore {
+
+  /** File-name prefix [[GridStore.compact]] gives its output: a date whose
+    * data files all carry it is merged (deduplicated) already.
+    */
+  val MergedPrefix = "final-"
 
   /** `fs.rename` that throws instead of returning false. Several
     * filesystems report a failed rename by returning false; a swap that

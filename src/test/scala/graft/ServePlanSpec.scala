@@ -4,7 +4,7 @@ import java.sql.{Date, Timestamp}
 import java.time.{Duration, Instant}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -94,7 +94,10 @@ class ServePlanSpec extends SparkSpec {
     def open(path: String): Iterator[GribMessage] = msgs.iterator
   }
 
-  private lazy val store = {
+  /** The store as `DailyJob.run` leaves it — every date it wrote compacted —
+    * and its FINAL view, taken before [[store]] appends to it.
+    */
+  private lazy val daily = {
     val base = tempDir("serve-plan")
     val grids = new GridStore(spark, s"$base/grid")
     val rawFiles = new CatalogStore(spark, s"$base/raw_files", "id")
@@ -107,6 +110,11 @@ class ServePlanSpec extends SparkSpec {
     job.run("cams", "cams-europe-air-quality-forecast", Date.valueOf("2026-01-01"),
       reader(camsSteps.map(ts => field("pm2p5", ts, "kg m-3", 1e-9, 1e-9))),
       "unused", Transforms.cams, Timestamp.valueOf("2026-01-01 08:05:00"))
+    (grids, grids.finalView(), curated.read(), rawFiles.read())
+  }
+
+  private lazy val store = {
+    val (grids, _, curated, rawFiles) = daily
     // An uncompacted second version of some keys: half the 18:00 and 00:00
     // temperature points re-appended with new values and a later insertedAt,
     // part under the slice's catalog id, part under an id with no curated row.
@@ -121,7 +129,7 @@ class ServePlanSpec extends SparkSpec {
     assert(grids.append(fresh) === 16L)
     assert(grids.raw().count() > grids.finalView().count(), "second versions stay uncompacted")
     // CAMS catalog ids keep their curated rows but lose the raw-file row
-    (grids.finalView(), curated.read(), rawFiles.read().filter(col("source") =!= "cams"))
+    (grids.finalView(), curated, rawFiles.filter(col("source") =!= "cams"))
   }
 
   private def request(lat: Double, lon: Double, ts: Instant, vars: String*) =
@@ -190,18 +198,15 @@ class ServePlanSpec extends SparkSpec {
     case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
   }
 
-  test("one request is one aggregate: no join, no broadcast, ≤2 shuffles, ≤3 jobs") {
-    val (view, curated, rawFiles) = store
-    val svc = new Service(view, curated, rawFiles, maxStaleness = Some(Duration.ofHours(6)))
-    val req = request(52.3, 13.3, ecmwfSteps(1).toInstant.plusSeconds(600),
-      "temperature", "humidity", "dewpoint")
+  /** Shuffles in the executed plan and Spark jobs of one warm request. */
+  private def requestShape(svc: Service, req: EnvironmentalRequest): (Int, Int) = {
     val frame = svc.plan(req)
     assert(frame.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty)
-    assert(frame.collect().length === 3)
+    assert(frame.collect().length === req.variables.length)
     val executed = nodes(frame.queryExecution.executedPlan)
     assert(executed.collect { case b: BroadcastExchangeExec => b }.isEmpty, executed.head)
     assert(executed.collect { case j: BaseJoinExec => j }.isEmpty, executed.head)
-    assert(executed.collect { case s: ShuffleExchangeExec => s }.length <= 2, executed.head)
+    val shuffles = executed.collect { case s: ShuffleExchangeExec => s }.length
 
     val sc = spark.sparkContext
     val group = s"serve-plan-${java.util.UUID.randomUUID()}"
@@ -218,7 +223,26 @@ class ServePlanSpec extends SparkSpec {
       try assert(svc.getVariables(req).isRight) finally sc.clearJobGroup()
       // listener delivery is async; give the bus a moment to drain
       Thread.sleep(1000)
-      assert(jobs.get() >= 1 && jobs.get() <= 3, s"${jobs.get()} Spark jobs for one request")
     } finally sc.removeSparkListener(listener)
+    assert(jobs.get() >= 1, "no Spark job ran for the request")
+    (shuffles, jobs.get())
+  }
+
+  private val shapeRequest = request(52.3, 13.3, ecmwfSteps(1).toInstant.plusSeconds(600),
+    "temperature", "humidity", "dewpoint")
+
+  test("one request is one aggregate: no join, no broadcast, ≤2 shuffles, ≤3 jobs") {
+    val (view, curated, rawFiles) = store
+    val svc = new Service(view, curated, rawFiles, maxStaleness = Some(Duration.ofHours(6)))
+    val (shuffles, jobs) = requestShape(svc, shapeRequest)
+    assert(shuffles <= 2 && jobs <= 3, s"$shuffles shuffles, $jobs Spark jobs for one request")
+  }
+
+  test("on a DailyJob-built store FINAL has no aggregate: ≤1 shuffle, ≤2 jobs per request") {
+    val (_, view, curated, rawFiles) = daily
+    assert(view.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.isEmpty)
+    val svc = new Service(view, curated, rawFiles, maxStaleness = Some(Duration.ofHours(6)))
+    val (shuffles, jobs) = requestShape(svc, shapeRequest)
+    assert(shuffles <= 1 && jobs <= 2, s"$shuffles shuffles, $jobs Spark jobs for one request")
   }
 }
